@@ -4,7 +4,7 @@ Run from the root of a checkout:
 
     python3 perfbench/run.py --workload batch_pipeline --seed 1 --seconds 5 --trace 0
     python3 perfbench/run.py --workload all            # every workload, one process each
-    python3 perfbench/run.py --workload all --smoke    # tiny inputs, about a minute
+    python3 perfbench/run.py --workload all --smoke    # tiny inputs, under two minutes
 
 One process runs one workload on a fresh Spark session (``local[N]``, N
 = usable cores). It generates the inputs from ``--seed``, sets up, warms
@@ -45,13 +45,16 @@ def _vm_hwm_kb(pid: int | str) -> int:
 
 
 def _confine_to_checkout(work: str) -> None:
-    """Point every scratch location of Python, Spark and the JVM into ``work``."""
+    """Point every scratch location of Python, Spark and the JVM into ``work``.
+
+    The benchmark may write only inside its checkout, so Spark's local
+    dir moves from the engine's default ``/dev/shm`` (a tmpfs) to disk;
+    every other engine default is kept."""
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp, exist_ok=True)
     os.environ["TMPDIR"] = tmp
     os.environ["SPARK_GRAFT_LOCAL_DIR"] = os.path.join(work, "spark-local")
     os.environ["SPARK_LOCAL_DIRS"] = os.environ["SPARK_GRAFT_LOCAL_DIR"]
-    os.environ["SPARK_GRAFT_DRIVER_MEM"] = "2g"
     os.environ["JAVA_TOOL_OPTIONS"] = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
 
 
@@ -107,7 +110,7 @@ def run_workload(args) -> dict:
     try:
         ctx = workloads.Ctx(spark, cores, work, args.seed, args.smoke)
         wl = workloads.WORKLOADS[args.workload](ctx)
-        wl.warm_up(traced=bool(args.trace))
+        wl.warm_up()
         setup_s = time.monotonic() - t_setup
 
         checks = workloads.Checks()

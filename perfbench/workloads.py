@@ -119,10 +119,13 @@ def _materialize(df):
     return df
 
 
-def _pr_stats(records: list[dict]) -> tuple[int, list[float]]:
-    """(iterations, per-round walls) from a pagerank metrics JSONL."""
-    rounds = [r["wall_s"] for r in records if r["iteration"] >= 0]
-    return len(rounds), rounds
+def _pr_iterations(records: list[dict]) -> int:
+    """Rounds run, from the summary record of a pagerank metrics JSONL."""
+    return next(r["iterations"] for r in records if r["iteration"] < 0)
+
+
+def _round_walls(records: list[dict]) -> list[float]:
+    return [r["wall_s"] for r in records if r["iteration"] >= 0]
 
 
 def _check_ids(checks: Checks, label: str, got: pd.DataFrame, want: pd.DataFrame) -> None:
@@ -162,17 +165,12 @@ class BatchPipeline:
         self.results: list[dict] = []
         self._oracles: dict[str, dict] = {}
 
-    def warm_up(self, traced: bool) -> None:
-        """The pipeline once on a tiny corpus with one kernel round, so class
-        loading, code generation and Python worker start-up are paid before
-        timing; then the hub graph. Triangle counting is warmed up only for
-        a traced run, whose untraced and traced passes must start equally
-        warm."""
+    def warm_up(self) -> None:
+        """Build the hub graph, then run the whole pass once on a tiny
+        corpus (one kernel round, a durable checkpoint after it, triangle
+        counts on the hub graph), so class loading, code generation and
+        Python worker start-up are paid before timing."""
         spark = self.ctx.spark
-        tiny = self.ctx.path("warmup.parquet")
-        _write_parquet(generate_documents(64, seed=self.ctx.seed), tiny)
-        self._pass(Tracer("warmup"), tiny, max_iter=1, hub=False)
-        spark.catalog.clearCache()
         hub_docs = spark.createDataFrame(self.hub_docs)
         verts = build_vertices(hub_docs).localCheckpoint(eager=True)
         self.hub = (verts, build_edges(hub_docs, verts).localCheckpoint(eager=True))
@@ -181,11 +179,15 @@ class BatchPipeline:
             "edges": self.hub[1].toPandas(),
         }
         self.hub_checked = False
-        if traced:
-            _materialize(triangle_counts(self.hub[1], self.hub[0]))
-            spark.catalog.clearCache()
+        tiny = self.ctx.path("warmup.parquet")
+        _write_parquet(generate_documents(64, seed=self.ctx.seed), tiny)
+        self._pass(Tracer("warmup"), tiny, max_iter=1, checkpoint_every=1)
+        spark.catalog.clearCache()
 
-    def _pass(self, tracer: Tracer, table: str, max_iter: int = 200, hub: bool = True) -> dict:
+    def _pass(
+        self, tracer: Tracer, table: str, max_iter: int = 200,
+        checkpoint_every: int = CHECKPOINT_EVERY,
+    ) -> dict:
         spark = self.ctx.spark
         ck = _fresh(self.ctx.path("checkpoints"))
         m = {k: _fresh(self.ctx.path(f"{k}.jsonl")) for k in ("cc", "pr", "lpa")}
@@ -201,7 +203,7 @@ class BatchPipeline:
             pr = _materialize(
                 pagerank(
                     edges, verts, tol=TOL, max_iter=max_iter, checkpoint_dir=ck,
-                    checkpoint_interval=CHECKPOINT_EVERY, metrics_path=m["pr"],
+                    checkpoint_interval=checkpoint_every, metrics_path=m["pr"],
                 )
             )
         with tracer.span("communities"):
@@ -210,10 +212,8 @@ class BatchPipeline:
                     edges, verts, max_iter=min(LPA_ROUNDS, max_iter), metrics_path=m["lpa"]
                 )
             )
-        tri = None
-        if hub:
-            with tracer.span("triangles"):
-                tri = _materialize(triangle_counts(self.hub[1], self.hub[0]))
+        with tracer.span("triangles"):
+            tri = _materialize(triangle_counts(self.hub[1], self.hub[0]))
         wall = time.monotonic() - t0
         return {
             "wall": wall,
@@ -226,7 +226,7 @@ class BatchPipeline:
             "cc": cc.toPandas(),
             "pr": pr.toPandas(),
             "lpa": lpa.toPandas(),
-            "tri": tri.toPandas() if tri is not None else None,
+            "tri": tri.toPandas(),
             "pr_log": _jsonl(m["pr"]),
             "cc_log": _jsonl(m["cc"]),
             "lpa_log": _jsonl(m["lpa"]),
@@ -305,16 +305,13 @@ class BatchPipeline:
         }
 
     def end_to_end(self) -> dict:
-        walls = [r["wall"] for r in self.results]
-        t, pct = tail(walls)
-        pr_rates = []
-        for r in self.results:
-            iters, _ = _pr_stats(r["pr_log"])
-            pr_rates.append(iters * len(r["main"]["edges"]) / r["pr_wall"])
+        pr_rates = [
+            _pr_iterations(r["pr_log"]) * len(r["main"]["edges"]) / r["pr_wall"]
+            for r in self.results
+        ]
         return {
-            "wall_s": statistics.median(walls),
+            "wall_s": statistics.median(r["wall"] for r in self.results),
             "pagerank_edge_msgs_per_s": statistics.median(pr_rates),
-            "extra": {"passes": len(walls), "tail_s": t, "tail_percentile": pct},
         }
 
     def more(self) -> bool:
@@ -322,7 +319,7 @@ class BatchPipeline:
 
     def layer_specific(self, outs: list[dict], counters: dict) -> dict:
         out = outs[0]
-        iters, rounds = _pr_stats(out["pr_log"])
+        iters, rounds = _pr_iterations(out["pr_log"]), _round_walls(out["pr_log"])
         n_edges = len(out["main"]["edges"])
         tri_total = int(out["tri"]["n_triangles"].sum()) // 3
         return {
@@ -383,11 +380,18 @@ class RefreshAppend:
         os.replace(self._staged(self.landed), os.path.join(self.src, name))
         self.landed += 1
 
-    def warm_up(self, traced: bool) -> None:
-        """Ingest and rank the base corpus (cold start)."""
+    def warm_up(self) -> None:
+        """Land the base corpus and the first batch, and refresh them
+        warm-started from the base graph's PageRank, so every code path of
+        a pass has run once before timing. The base ranks come from the
+        numpy oracle: the engine's cold rank is what batch_pipeline
+        measures, and running it here would only lengthen set-up."""
+        base = self.oracle_for(self.bounds[0])
+        ranked = base["verts"].assign(score=base["pr"])[["repo", "path", "score"]]
+        self.prior = self.ctx.spark.createDataFrame(ranked).localCheckpoint(eager=True)
+        self._land()
         self._land()
         self._refresh(Tracer("warmup"))
-        self.ctx.spark.catalog.clearCache()
 
     def more(self) -> bool:
         return self.landed <= self.max_batches
@@ -475,11 +479,10 @@ class RefreshAppend:
     def end_to_end(self) -> dict:
         walls = [r["wall"] for r in self.results]
         t, pct = tail(walls)
-        rates = []
-        for r in self.results:
-            iters, _ = _pr_stats(r["pr_log"])
-            edges = r["pr_log"][0]["edges"] if r["pr_log"] else 0
-            rates.append(iters * edges / r["pr_wall"])
+        rates = [
+            _pr_iterations(r["pr_log"]) * r["pr_log"][0]["edges"] / r["pr_wall"]
+            for r in self.results
+        ]
         return {
             "wall_s": statistics.median(walls),
             "pagerank_edge_msgs_per_s": statistics.median(rates),
@@ -494,9 +497,9 @@ class RefreshAppend:
     def layer_specific(self, outs: list[dict], counters: dict) -> dict:
         iters, rounds, edge_rounds = 0, [], 0
         for out in outs:
-            it, rw = _pr_stats(out["pr_log"])
+            it = _pr_iterations(out["pr_log"])
             iters += it
-            rounds += rw
+            rounds += _round_walls(out["pr_log"])
             edge_rounds += it * out["pr_log"][0]["edges"]
         refs = outs[-1]["refs"]
         return {
