@@ -64,3 +64,16 @@ class CheckpointManager:
         if m is None or not os.path.exists(m["path"]):
             return None
         return spark.read.parquet(m["path"]), m
+
+    def restore(
+        self, spark: SparkSession, key: str, num_partitions: int
+    ) -> tuple[DataFrame | None, int]:
+        """Resume point: the newest snapshot hash-partitioned on ``key``
+        at the kernel's width with its lineage cut, and the iteration it
+        was saved at — ``(None, 0)`` when there is nothing to resume."""
+        loaded = self.load(spark)
+        if loaded is None:
+            return None, 0
+        df, manifest = loaded
+        df = df.repartition(num_partitions, key).localCheckpoint(eager=True)
+        return df, manifest["iteration"]

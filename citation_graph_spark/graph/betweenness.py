@@ -39,10 +39,10 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.graph.degrees import auto_partitions, undirect
+from citation_graph_spark.graph.degrees import pin_edges, undirect
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import (
-    iterative_kernel_conf,
+    iterative_kernel,
     shuffle_partitions_conf,
 )
 
@@ -98,11 +98,11 @@ def backward_round_lineage(
     )
 
 
+@iterative_kernel
 def betweenness_sampled(
     edges: DataFrame,
     sources: DataFrame,
     max_iter: int = 30,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
 ) -> DataFrame:
     """Returns ``(vid: long, bc_micro: long)`` for every vertex that
@@ -112,17 +112,27 @@ def betweenness_sampled(
     levels; with a cap the result is the dependency sum over the
     ≤max_iter-hop shortest-path DAG — the (still well-defined) state
     the SQL oracle mirrors."""
-    with iterative_kernel_conf(edges.sparkSession):
-        return _betweenness(
-            edges, sources, max_iter, num_partitions, metrics_path
-        )
+    e, verts, done = _brandes_state(edges, sources, max_iter, metrics_path)
+    bc = (
+        done.filter(F.col("vid") != F.col("s"))
+        .groupBy("vid")
+        .agg(F.sum("delta").alias("bc"))
+    )
+    out = verts.join(bc, "vid", "left").select(
+        "vid",
+        F.floor(F.coalesce(F.col("bc"), F.lit(0.0)) * 1000000 + F.lit(0.5))
+        .cast("long")
+        .alias("bc_micro"),
+    )
+    e.unpersist()
+    return out
 
 
+@iterative_kernel
 def edge_betweenness_sampled(
     edges: DataFrame,
     sources: DataFrame,
     max_iter: int = 30,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
 ) -> DataFrame:
     """Returns ``(a: long, b: long, eb_micro: long)`` for every
@@ -135,13 +145,10 @@ def edge_betweenness_sampled(
     score — one extra edge join and groupBy, no extra rounds. Floored
     to micro-integers for exact cross-engine comparison (per-term
     formula identical on both sides; only summation order floats)."""
-    with iterative_kernel_conf(edges.sparkSession):
-        e, verts, done = _brandes_state(
-            edges, sources, max_iter, num_partitions, metrics_path
-        )
-        out = edge_dependency_lineage(e, done)
-        e.unpersist()
-        return out
+    e, verts, done = _brandes_state(edges, sources, max_iter, metrics_path)
+    out = edge_dependency_lineage(e, done)
+    e.unpersist()
+    return out
 
 
 def edge_dependency_lineage(e: DataFrame, done: DataFrame) -> DataFrame:
@@ -196,36 +203,10 @@ def edge_dependency_lineage(e: DataFrame, done: DataFrame) -> DataFrame:
         return out
 
 
-def _betweenness(
-    edges: DataFrame,
-    sources: DataFrame,
-    max_iter: int,
-    num_partitions: int | None,
-    metrics_path: str | None,
-) -> DataFrame:
-    e, verts, done = _brandes_state(
-        edges, sources, max_iter, num_partitions, metrics_path
-    )
-    bc = (
-        done.filter(F.col("vid") != F.col("s"))
-        .groupBy("vid")
-        .agg(F.sum("delta").alias("bc"))
-    )
-    out = verts.join(bc, "vid", "left").select(
-        "vid",
-        F.floor(F.coalesce(F.col("bc"), F.lit(0.0)) * 1000000 + F.lit(0.5))
-        .cast("long")
-        .alias("bc_micro"),
-    )
-    e.unpersist()
-    return out
-
-
 def _brandes_state(
     edges: DataFrame,
     sources: DataFrame,
     max_iter: int,
-    num_partitions: int | None,
     metrics_path: str | None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Forward + backward Brandes passes; returns ``(e, verts, done)``
@@ -235,13 +216,7 @@ def _brandes_state(
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "betweenness")
 
-    e0 = undirect(edges).select("src", "dst").persist()
-    n_edges = e0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_edges)
-    e = e0.repartition(num_partitions, "src").persist()
-    e.count()
-    e0.unpersist()
+    e, _, num_partitions = pin_edges(undirect(edges).select("src", "dst"))
 
     verts = (
         e.select(F.col("src").alias("vid"))

@@ -37,11 +37,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from citation_graph_spark.checkpointing import CheckpointManager
-from citation_graph_spark.graph.degrees import auto_partitions, undirect
+from citation_graph_spark.graph.degrees import pin_edges, undirect
 from citation_graph_spark.graph.mis import mis_round_lineage
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import (
-    iterative_kernel_conf,
+    iterative_kernel,
     shuffle_partitions_conf,
 )
 
@@ -116,10 +116,10 @@ def _finish_local_coloring(
     return out
 
 
+@iterative_kernel
 def greedy_coloring(
     edges: DataFrame,
     max_iter: int = 100,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
     checkpoint_dir: str | None = None,
     checkpoint_interval: int = 4,
@@ -145,29 +145,6 @@ def greedy_coloring(
     remaining rounds replay as one exact driver pass (None → module
     default ``_LOCAL_FINISH_ROWS``; 0 forces the distributed rounds,
     used by their equality tests). Identical colors either way."""
-    with iterative_kernel_conf(edges.sparkSession):
-        return _coloring(
-            edges,
-            max_iter,
-            num_partitions,
-            metrics_path,
-            checkpoint_dir,
-            checkpoint_interval,
-            resume,
-            local_finish_rows,
-        )
-
-
-def _coloring(
-    edges: DataFrame,
-    max_iter: int,
-    num_partitions: int | None,
-    metrics_path: str | None,
-    checkpoint_dir: str | None = None,
-    checkpoint_interval: int = 4,
-    resume: bool = False,
-    local_finish_rows: int | None = None,
-) -> DataFrame:
     if local_finish_rows is None:
         local_finish_rows = _LOCAL_FINISH_ROWS
     spark = edges.sparkSession
@@ -178,13 +155,7 @@ def _coloring(
         else None
     )
 
-    und0 = undirect(edges).select("src", "dst").persist()
-    n_sym = und0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_sym)
-    e = und0.repartition(num_partitions, "src").persist()
-    e.count()
-    und0.unpersist()
+    e, _, num_partitions = pin_edges(undirect(edges).select("src", "dst"))
 
     verts = (
         e.select(F.col("src").alias("vid"))
@@ -192,17 +163,13 @@ def _coloring(
         .repartition(num_partitions, "vid")
         .localCheckpoint(eager=True)
     )
-    colored = spark.createDataFrame(
-        [], "vid long, color long, color_round long"
+    colored, start_iter = (
+        ckpt.restore(spark, "vid", num_partitions) if ckpt and resume else (None, 0)
     )
-    start_iter = 0
-    if ckpt and resume:
-        loaded = ckpt.load(spark)
-        if loaded is not None:
-            saved, manifest = loaded
-            start_iter = manifest["iteration"]
-            colored = saved.repartition(num_partitions, "vid")
-    colored = colored.localCheckpoint(eager=True)
+    if colored is None:
+        colored = spark.createDataFrame(
+            [], "vid long, color long, color_round long"
+        ).localCheckpoint(eager=True)
     active = verts.join(colored, "vid", "left_anti").repartition(
         num_partitions, "vid"
     ).localCheckpoint(eager=True)

@@ -27,19 +27,19 @@ import time
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from citation_graph_spark.graph.degrees import auto_partitions, undirect
+from citation_graph_spark.graph.degrees import pin_edges, undirect
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import (
-    iterative_kernel_conf,
+    iterative_kernel,
     shuffle_partitions_conf,
 )
 
 
+@iterative_kernel
 def label_propagation(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     max_iter: int = 10,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
     weighted: bool = False,
 ) -> DataFrame:
@@ -50,20 +50,6 @@ def label_propagation(
     of 1 (weights cast to BIGINT — integer-exact sums keep the argmax
     deterministic cross-engine; same desc-total, asc-label tie-break).
     """
-    with iterative_kernel_conf(edges.sparkSession):
-        return _label_propagation(
-            edges, vertices, max_iter, num_partitions, metrics_path, weighted
-        )
-
-
-def _label_propagation(
-    edges: DataFrame,
-    vertices: DataFrame | None,
-    max_iter: int,
-    num_partitions: int | None,
-    metrics_path: str | None,
-    weighted: bool = False,
-) -> DataFrame:
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "label_propagation")
 
@@ -95,13 +81,8 @@ def _label_propagation(
         )
         und0 = fwd.unionByName(rev).persist()
     else:
-        und0 = undirect(edges).persist()
-    n_und = und0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_und)
-    und = und0.repartition(num_partitions, "src").persist()
-    und.count()
-    und0.unpersist()
+        und0 = undirect(edges)
+    und, _, num_partitions = pin_edges(und0)
     if vertices is None:
         vertices = und.select(F.col("src").alias("vid")).distinct()
     vertices = vertices.select("vid")

@@ -31,7 +31,7 @@ from citation_graph_spark.checkpointing import CheckpointManager
 from citation_graph_spark.graph.degrees import auto_partitions, undirect
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import (
-    iterative_kernel_conf,
+    iterative_kernel,
     shuffle_partitions_conf,
 )
 
@@ -95,11 +95,11 @@ def _local_components(und: DataFrame, vertices: DataFrame) -> DataFrame:
     )
 
 
+@iterative_kernel
 def connected_components(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     max_iter: int = 100,
-    num_partitions: int | None = None,
     checkpoint_dir: str | None = None,
     checkpoint_interval: int = 5,
     resume: bool = False,
@@ -137,28 +137,6 @@ def connected_components(
     suppressed when ``checkpoint_dir``/``resume`` are set: the star
     variant carries no CheckpointManager, and the durable kill+resume
     contract always wins over the round-count optimization."""
-    with iterative_kernel_conf(edges.sparkSession):
-        return _connected_components(
-            edges, vertices, max_iter, num_partitions, checkpoint_dir,
-            checkpoint_interval, resume, metrics_path, star_contraction,
-            star_threshold, init_labels, local_finish_edges,
-        )
-
-
-def _connected_components(
-    edges: DataFrame,
-    vertices: DataFrame | None,
-    max_iter: int,
-    num_partitions: int | None,
-    checkpoint_dir: str | None,
-    checkpoint_interval: int,
-    resume: bool,
-    metrics_path: str | None,
-    star_contraction: bool | None,
-    star_threshold: int,
-    init_labels: DataFrame | None = None,
-    local_finish_edges: int | None = None,
-) -> DataFrame:
     if local_finish_edges is None:
         local_finish_edges = _LOCAL_FINISH_UND_ROWS
     if star_contraction:
@@ -223,8 +201,7 @@ def _connected_components(
         return _star_components(
             edges, vertices, max_iter, metrics_path, local_finish_edges
         )
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_und)
+    num_partitions = auto_partitions(spark, n_und)
     und = und0.repartition(num_partitions, "src").persist()
     und.count()
     und0.unpersist()
@@ -233,14 +210,9 @@ def _connected_components(
         vertices = und.select(F.col("src").alias("vid")).distinct()
     vertices = vertices.select("vid")
 
-    start_iter = 0
-    labels = None
-    if ckpt and resume:
-        loaded = ckpt.load(spark)
-        if loaded is not None:
-            labels, manifest = loaded
-            start_iter = manifest["iteration"]
-            labels = labels.repartition(num_partitions, "vid").localCheckpoint(eager=True)
+    labels, start_iter = (
+        ckpt.restore(spark, "vid", num_partitions) if ckpt and resume else (None, 0)
+    )
     if labels is None:
         if init_labels is not None:
             labels = (
@@ -259,6 +231,10 @@ def _connected_components(
                 .repartition(num_partitions, "vid")
                 .localCheckpoint(eager=True)
             )
+    if start_iter >= max_iter:
+        # resumed at (or past) the round cap: the snapshot is the answer
+        und.unpersist()
+        return labels.select("vid", F.col("label").alias("component"))
 
     with shuffle_partitions_conf(spark, num_partitions):
         for it in range(start_iter, max_iter):

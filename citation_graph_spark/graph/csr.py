@@ -34,7 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.graph.degrees import auto_partitions
+from citation_graph_spark.graph.degrees import pin_edges
 
 
 def csr_contribution_sums(edges_n: DataFrame, ranks: DataFrame) -> DataFrame:
@@ -84,7 +84,6 @@ def pagerank_csr(
     alpha: float = 0.85,
     tol: float = 1e-6,
     max_iter: int = 200,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """PageRank with the CSR-block contribution step. Semantics are
     identical to graph.pagerank (same dangling handling, same
@@ -103,14 +102,8 @@ def pagerank_csr(
     edges_n0 = (
         edges.join(out_deg, "src")
         .select("src", "dst", (F.col("weight") / F.col("_wout")).alias("wnorm"))
-        .persist()
     )
-    edge_count = edges_n0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, edge_count)
-    edges_n = edges_n0.repartition(num_partitions, "src").persist()
-    edges_n.count()
-    edges_n0.unpersist()
+    edges_n, _, num_partitions = pin_edges(edges_n0)
 
     n = vertices.count()
     if n == 0:

@@ -30,6 +30,26 @@ def auto_partitions(
     return max(floor, min(cap, n_rows // rows_per_partition + 1))
 
 
+def pin_edges(df: DataFrame, key: str = "src") -> tuple[DataFrame, int, int]:
+    """Cache ``df`` hash-partitioned on ``key`` at a data-proportional
+    width — the layout every round of an iterative kernel joins against
+    without an exchange. One pass over the (possibly expensively
+    derived) input counts it for sizing; the pinned copy is then
+    materialized and the raw cache released (also when the count
+    raises, e.g. on a kernel's input validation).
+
+    Returns ``(pinned, n_rows, num_partitions)``."""
+    raw = df.persist()
+    try:
+        n_rows = raw.count()
+        num_partitions = auto_partitions(df.sparkSession, n_rows)
+        pinned = raw.repartition(num_partitions, key).persist()
+        pinned.count()
+    finally:
+        raw.unpersist()
+    return pinned, n_rows, num_partitions
+
+
 def out_degrees(edges: DataFrame, weighted: bool = True) -> DataFrame:
     """(src) → out_degree; weighted sums edge weights (PageRank uses this
     to normalize contributions)."""

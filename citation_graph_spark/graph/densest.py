@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from citation_graph_spark.graph.degrees import auto_partitions, undirect
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import (
-    iterative_kernel_conf,
+    iterative_kernel,
     shuffle_partitions_conf,
 )
 
@@ -61,7 +61,6 @@ def peel_round_lineage(
 def densest_subgraph_rounds(
     edges: DataFrame,
     max_iter: int = 100,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
 ) -> DataFrame:
     """Run the peel to exhaustion (or ``max_iter``) and return one row
@@ -71,8 +70,7 @@ def densest_subgraph_rounds(
     maximum density — the 2(1+eps)-approximate densest subgraph is the
     survivor set entering that round (see
     :func:`densest_subgraph_vertices`)."""
-    with iterative_kernel_conf(edges.sparkSession):
-        rows, _ = _peel(edges, max_iter, num_partitions, metrics_path, None)
+    rows, _ = _peel(edges, max_iter, metrics_path, keep_snapshots=False)
     spark = edges.sparkSession
     best_density = max(r[3] for r in rows)
     best_round = min(r[0] for r in rows if r[3] == best_density)
@@ -87,34 +85,29 @@ def densest_subgraph_rounds(
 def densest_subgraph_vertices(
     edges: DataFrame,
     max_iter: int = 100,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
 ) -> DataFrame:
     """Returns ``(vid: long)`` — the survivor set at the best-density
     round (the 2(1+eps)-approximate densest subgraph)."""
-    with iterative_kernel_conf(edges.sparkSession):
-        rows, snapshots = _peel(
-            edges, max_iter, num_partitions, metrics_path, keep_snapshots=True
-        )
+    rows, snapshots = _peel(edges, max_iter, metrics_path, keep_snapshots=True)
     best_density = max(r[3] for r in rows)
     best_round = min(r[0] for r in rows if r[3] == best_density)
     return snapshots[best_round]
 
 
+@iterative_kernel
 def _peel(
     edges: DataFrame,
     max_iter: int,
-    num_partitions: int | None,
     metrics_path: str | None,
-    keep_snapshots: bool | None,
+    keep_snapshots: bool,
 ):
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "densest_subgraph")
 
     und0 = undirect(edges).select("src", "dst").persist()
     n_sym = und0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_sym)
+    num_partitions = auto_partitions(spark, n_sym)
     alive = (
         und0.repartition(num_partitions, "src").localCheckpoint(eager=True)
     )

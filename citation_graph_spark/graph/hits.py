@@ -35,35 +35,24 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.graph.degrees import auto_partitions
+from citation_graph_spark.graph.degrees import pin_edges
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import (
-    iterative_kernel_conf,
+    iterative_kernel,
     shuffle_partitions_conf,
 )
 
 
+@iterative_kernel
 def hits(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     max_iter: int = 15,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
 ) -> DataFrame:
     """Returns ``(vid: long, authority: double, hub: double)``;
     Σ authority = Σ hub = 1 (L1 normalization each round). Fixed
     ``max_iter`` synchronous rounds."""
-    with iterative_kernel_conf(edges.sparkSession):
-        return _hits(edges, vertices, max_iter, num_partitions, metrics_path)
-
-
-def _hits(
-    edges: DataFrame,
-    vertices: DataFrame | None,
-    max_iter: int,
-    num_partitions: int | None,
-    metrics_path: str | None,
-) -> DataFrame:
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "hits")
 
@@ -88,13 +77,7 @@ def _hits(
     rev = edges.select(
         F.col("dst").alias("mfrom"), F.col("src").alias("mto"), F.lit(False).alias("is_fwd")
     )
-    e0 = fwd.unionByName(rev).persist()
-    n_msgs = e0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_msgs)
-    e = e0.repartition(num_partitions, "mfrom").persist()
-    e.count()
-    e0.unpersist()
+    e, n_msgs, num_partitions = pin_edges(fwd.unionByName(rev), "mfrom")
 
     state = (
         vertices.select(

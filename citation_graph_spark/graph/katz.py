@@ -36,10 +36,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from citation_graph_spark.checkpointing import CheckpointManager
-from citation_graph_spark.graph.degrees import auto_partitions
+from citation_graph_spark.graph.degrees import pin_edges
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import (
-    iterative_kernel_conf,
+    iterative_kernel,
     shuffle_partitions_conf,
 )
 
@@ -70,13 +70,13 @@ def round_lineage(
     )
 
 
+@iterative_kernel
 def katz_centrality(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     alpha: float = 0.001,
     beta: float = 1.0,
     max_iter: int = 8,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
     checkpoint_dir: str | None = None,
     checkpoint_interval: int = 4,
@@ -91,25 +91,6 @@ def katz_centrality(
     ``resume=True`` continues from the newest snapshot — bit-identical
     final scores (doubles round-trip parquet exactly; the resumed run
     replays the identical remaining schedule)."""
-    with iterative_kernel_conf(edges.sparkSession):
-        return _katz(
-            edges, vertices, alpha, beta, max_iter, num_partitions,
-            metrics_path, checkpoint_dir, checkpoint_interval, resume,
-        )
-
-
-def _katz(
-    edges: DataFrame,
-    vertices: DataFrame | None,
-    alpha: float,
-    beta: float,
-    max_iter: int,
-    num_partitions: int | None,
-    metrics_path: str | None,
-    checkpoint_dir: str | None = None,
-    checkpoint_interval: int = 4,
-    resume: bool = False,
-) -> DataFrame:
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "katz")
     ckpt = CheckpointManager(checkpoint_dir, "katz") if checkpoint_dir else None
@@ -125,29 +106,14 @@ def _katz(
     if n == 0:
         return spark.createDataFrame([], "vid long, score double")
 
-    e0 = edges.select("src", "dst").distinct().persist()
-    n_edges = e0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_edges)
-    e = e0.repartition(num_partitions, "src").persist()
-    e.count()
-    e0.unpersist()
+    e, n_edges, num_partitions = pin_edges(edges.select("src", "dst").distinct())
 
-    start_iter = 0
-    state = None
-    if ckpt and resume:
-        loaded = ckpt.load(spark)
-        if loaded is not None:
-            saved, manifest = loaded
-            start_iter = manifest["iteration"]
-            state = (
-                saved.select("vid", "x")
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
-            )
-            if start_iter >= max_iter:
-                e.unpersist()
-                return state.select("vid", F.col("x").alias("score"))
+    state, start_iter = (
+        ckpt.restore(spark, "vid", num_partitions) if ckpt and resume else (None, 0)
+    )
+    if state is not None and start_iter >= max_iter:
+        e.unpersist()
+        return state.select("vid", F.col("x").alias("score"))
     if state is None:
         state = (
             vertices.select("vid", F.lit(float(beta)).alias("x"))

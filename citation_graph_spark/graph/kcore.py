@@ -30,19 +30,19 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.graph.degrees import auto_partitions, undirect
+from citation_graph_spark.graph.degrees import pin_edges, undirect
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import (
-    iterative_kernel_conf,
+    iterative_kernel,
     shuffle_partitions_conf,
 )
 
 
+@iterative_kernel
 def k_core(
     edges: DataFrame,
     k: int,
     max_iter: int = 100,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
 ) -> DataFrame:
     """Returns ``(vid: long)`` — the vertices of the k-core (undirected
@@ -50,27 +50,10 @@ def k_core(
     remove-all-below-k rounds. ``max_iter`` caps the rounds; with a cap
     the result is the (still well-defined) state after exactly that
     many synchronous peels, which the SQL oracle mirrors."""
-    with iterative_kernel_conf(edges.sparkSession):
-        return _k_core(edges, k, max_iter, num_partitions, metrics_path)
-
-
-def _k_core(
-    edges: DataFrame,
-    k: int,
-    max_iter: int,
-    num_partitions: int | None,
-    metrics_path: str | None,
-) -> DataFrame:
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "k_core")
 
-    und0 = undirect(edges).select("src", "dst").persist()
-    n_und = und0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_und)
-    e = und0.repartition(num_partitions, "src").persist()
-    e.count()
-    und0.unpersist()
+    e, _, num_partitions = pin_edges(undirect(edges).select("src", "dst"))
 
     alive = (
         e.select(F.col("src").alias("vid"))

@@ -41,7 +41,7 @@ from citation_graph_spark.graph.degrees import auto_partitions
 from citation_graph_spark.graph.triangles import oriented_edges
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import (
-    iterative_kernel_conf,
+    iterative_kernel,
     shuffle_partitions_conf,
 )
 
@@ -90,11 +90,11 @@ def _support_from_oriented(o: DataFrame) -> DataFrame:
     return sides.groupBy("a", "b").agg(F.count(F.lit(1)).alias("support"))
 
 
+@iterative_kernel
 def k_truss(
     edges: DataFrame,
     k: int,
     max_iter: int = 50,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
 ) -> DataFrame:
     """Returns ``(a: long, b: long, support: long)`` with a < b — the
@@ -105,17 +105,6 @@ def k_truss(
     that many synchronous peels, which the SQL oracle mirrors."""
     if k < 3:
         raise ValueError(f"k-truss needs k >= 3, got {k}")
-    with iterative_kernel_conf(edges.sparkSession):
-        return _k_truss(edges, k, max_iter, num_partitions, metrics_path)
-
-
-def _k_truss(
-    edges: DataFrame,
-    k: int,
-    max_iter: int,
-    num_partitions: int | None,
-    metrics_path: str | None,
-) -> DataFrame:
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "k_truss")
 
@@ -129,8 +118,7 @@ def _k_truss(
         .persist()
     )
     n_edges = canon.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_edges)
+    num_partitions = auto_partitions(spark, n_edges)
     alive = canon.repartition(num_partitions, "a").localCheckpoint(eager=True)
     canon.unpersist()
     n_alive = alive.count()
@@ -168,14 +156,15 @@ def _k_truss(
     )
 
 
-def _edge_support(canon: DataFrame, num_partitions: int) -> DataFrame:
+def _edge_support(canon: DataFrame, width: int) -> DataFrame:
     """Orient, MATERIALIZE the orientation (it is read four times by
-    the wedge/closure joins), then count per-edge support."""
+    the wedge/closure joins) hash-partitioned ``width`` ways on ``u``,
+    then count per-edge support."""
     o = (
         oriented_edges(
             canon.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         )
-        .repartition(num_partitions, "u")
+        .repartition(width, "u")
         .localCheckpoint(eager=True)
     )
     return _support_from_oriented(o)

@@ -51,7 +51,7 @@ from citation_graph_spark.checkpointing import CheckpointManager
 from citation_graph_spark.graph.degrees import auto_partitions, undirect
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import (
-    iterative_kernel_conf,
+    iterative_kernel,
     shuffle_partitions_conf,
 )
 
@@ -130,10 +130,10 @@ def matching_round_lineage(act: DataFrame, it: int) -> DataFrame:
     )
 
 
+@iterative_kernel
 def maximal_matching(
     edges: DataFrame,
     max_iter: int = 100,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
     checkpoint_dir: str | None = None,
     checkpoint_interval: int = 4,
@@ -158,29 +158,6 @@ def maximal_matching(
     remaining rounds replay as one exact driver pass (None → module
     default ``_LOCAL_FINISH_ROWS``; 0 forces the distributed rounds,
     used by their equality tests). Identical matching either way."""
-    with iterative_kernel_conf(edges.sparkSession):
-        return _matching(
-            edges,
-            max_iter,
-            num_partitions,
-            metrics_path,
-            checkpoint_dir,
-            checkpoint_interval,
-            resume,
-            local_finish_rows,
-        )
-
-
-def _matching(
-    edges: DataFrame,
-    max_iter: int,
-    num_partitions: int | None,
-    metrics_path: str | None,
-    checkpoint_dir: str | None = None,
-    checkpoint_interval: int = 4,
-    resume: bool = False,
-    local_finish_rows: int | None = None,
-) -> DataFrame:
     if local_finish_rows is None:
         local_finish_rows = _LOCAL_FINISH_ROWS
     spark = edges.sparkSession
@@ -193,8 +170,7 @@ def _matching(
 
     und0 = undirect(edges).select("src", "dst").persist()
     n_sym = und0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_sym)
+    num_partitions = auto_partitions(spark, n_sym)
 
     m = ((F.col("a") % _P) * F.lit(1000003) + F.col("b") % _P) % _P
     act = (
@@ -212,15 +188,13 @@ def _matching(
     )
     und0.unpersist()
 
-    matched = spark.createDataFrame([], "a long, b long, match_round long")
-    start_iter = 0
-    if ckpt and resume:
-        loaded = ckpt.load(spark)
-        if loaded is not None:
-            saved, manifest = loaded
-            start_iter = manifest["iteration"]
-            matched = saved.repartition(num_partitions, "a")
-    matched = matched.localCheckpoint(eager=True)
+    matched, start_iter = (
+        ckpt.restore(spark, "a", num_partitions) if ckpt and resume else (None, 0)
+    )
+    if matched is None:
+        matched = spark.createDataFrame(
+            [], "a long, b long, match_round long"
+        ).localCheckpoint(eager=True)
     mv0 = (
         matched.select(F.col("a").alias("vid"))
         .unionByName(matched.select(F.col("b").alias("vid")))

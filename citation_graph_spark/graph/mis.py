@@ -35,10 +35,10 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.graph.degrees import auto_partitions, undirect
+from citation_graph_spark.graph.degrees import pin_edges, undirect
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import (
-    iterative_kernel_conf,
+    iterative_kernel,
     shuffle_partitions_conf,
 )
 
@@ -71,10 +71,10 @@ def mis_round_lineage(e: DataFrame, active: DataFrame, it: int) -> DataFrame:
     )
 
 
+@iterative_kernel
 def maximal_independent_set(
     edges: DataFrame,
     max_iter: int = 100,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
 ) -> DataFrame:
     """Returns ``(vid, in_mis, mis_round)`` over the edge-derived
@@ -83,26 +83,10 @@ def maximal_independent_set(
     maximality hold at the fixpoint; with a ``max_iter`` cap the
     result is the state after exactly that many synchronous rounds
     (which the SQL oracle mirrors)."""
-    with iterative_kernel_conf(edges.sparkSession):
-        return _mis(edges, max_iter, num_partitions, metrics_path)
-
-
-def _mis(
-    edges: DataFrame,
-    max_iter: int,
-    num_partitions: int | None,
-    metrics_path: str | None,
-) -> DataFrame:
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "mis")
 
-    und0 = undirect(edges).select("src", "dst").persist()
-    n_sym = und0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_sym)
-    e = und0.repartition(num_partitions, "src").persist()
-    e.count()
-    und0.unpersist()
+    e, _, num_partitions = pin_edges(undirect(edges).select("src", "dst"))
 
     verts = (
         e.select(F.col("src").alias("vid"))

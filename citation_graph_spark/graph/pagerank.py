@@ -41,21 +41,10 @@ from pyspark.sql import functions as F
 from citation_graph_spark.checkpointing import CheckpointManager
 from citation_graph_spark.graph.degrees import auto_partitions
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel_conf,
-    shuffle_partitions_conf,
-)
-
-# rounds fused per materialization job on the fixed-round path.
-# A/B on the sf0.1 part graph (190k sym edges, 20 rounds, warm):
-# unroll 1 → 7.3s, 2 → 7.2s, 4 → 8.6s. Fusing rounds LOSES: between
-# materializations the vertex state isn't cached, so Catalyst plans
-# fresh exchanges for every fused round instead of reusing the pinned
-# vid-partitioning the materialized path gets for free. Kept at 1; the
-# knob documents the measured negative result.
-UNROLL = 1
+from citation_graph_spark.session import iterative_kernel, shuffle_partitions_conf
 
 
+@iterative_kernel
 def pagerank(
     edges: DataFrame,
     vertices: DataFrame | None = None,
@@ -89,28 +78,6 @@ def pagerank(
     scratch after each ingest batch — data_sources/utils.py:23-121;
     warm start is the Spark-native O(drift) version of that refresh).
     """
-    with iterative_kernel_conf(edges.sparkSession):
-        return _pagerank(
-            edges, vertices, alpha, tol, max_iter, num_partitions,
-            checkpoint_dir, checkpoint_interval, resume, metrics_path,
-            salt_buckets, init_ranks,
-        )
-
-
-def _pagerank(
-    edges: DataFrame,
-    vertices: DataFrame | None,
-    alpha: float,
-    tol: float,
-    max_iter: int,
-    num_partitions: int | None,
-    checkpoint_dir: str | None,
-    checkpoint_interval: int,
-    resume: bool,
-    metrics_path: str | None,
-    salt_buckets: int,
-    init_ranks: DataFrame | None = None,
-) -> DataFrame:
     spark = edges.sparkSession
 
     metrics = MetricsLogger(metrics_path, "pagerank")
@@ -156,22 +123,18 @@ def _pagerank(
 
     n = vertices.count()
     if n == 0:
+        for df in (edges_n, out_deg, edges_p):
+            df.unpersist()
         return spark.createDataFrame([], "vid long, score double")
 
-    start_iter = 0
-    ranks = None
-    if ckpt and resume:
-        loaded = ckpt.load(spark)
-        if loaded is not None:
-            ranks, manifest = loaded
-            start_iter = manifest["iteration"]
-            ranks = ranks.repartition(num_partitions, "vid").localCheckpoint(eager=True)
-            if manifest.get("meta", {}).get("converged"):
-                # already at fixpoint — identical results, no extra rounds
-                edges_n.unpersist()
-                out_deg.unpersist()
-                edges_p.unpersist()
-                return ranks.select("vid", F.col("rank").alias("score"))
+    ranks, start_iter = (
+        ckpt.restore(spark, "vid", num_partitions) if ckpt and resume else (None, 0)
+    )
+    if ranks is not None and ckpt.latest()["meta"].get("converged"):
+        # already at fixpoint — identical results, no extra rounds
+        for df in (edges_n, out_deg, edges_p):
+            df.unpersist()
+        return ranks.select("vid", F.col("rank").alias("score"))
     if ranks is None:
         dangling_flags = vertices.join(
             out_deg.select("src"),
@@ -227,11 +190,6 @@ def _pagerank(
     # iteration count) the per-round stats collect is pure driver
     # latency — skip it; d_mass stays 0 and l1 stays inf
     need_stats = (tol > 0.0) or (d_mass > 0.0)
-    # fixed-round, no-dangling, no-durable-checkpoint runs have no
-    # per-round driver decision to make — fuse several rounds into one
-    # materialization job (identical per-round arithmetic, just a
-    # deeper plan per job; lineage still truncated at each block)
-    unroll = UNROLL if (not need_stats and ckpt is None) else 1
 
     def one_round(cur: DataFrame) -> DataFrame:
         contribs = edges_n.join(
@@ -269,14 +227,11 @@ def _pagerank(
     with shuffle_partitions_conf(spark, num_partitions):
         while it < max_iter:
             t0 = time.monotonic()
-            steps = min(unroll, max_iter - it)
-            new_ranks = ranks
-            for _ in range(steps):
-                new_ranks = one_round(new_ranks.drop("_prev"))
-            # lazy checkpoint: when stats run, their collect materializes
-            # the checkpoint as a side effect — ONE Spark job per block,
-            # not two
-            new_ranks = new_ranks.localCheckpoint(eager=not need_stats)
+            # rounds are not fused: an A/B measured unroll 4 slower than 1
+            # (8.6 s vs 7.3 s) as unmaterialized state re-plans exchanges.
+            # Lazy checkpoint: when stats run, their collect materializes
+            # it as a side effect — ONE Spark job per round, not two
+            new_ranks = one_round(ranks).localCheckpoint(eager=not need_stats)
 
             if need_stats:
                 stats = new_ranks.agg(
@@ -288,7 +243,7 @@ def _pagerank(
                 ).collect()[0]
                 l1, d_mass = stats["l1"], stats["d_mass"]
             ranks = new_ranks.drop("_prev")
-            it += steps
+            it += 1
 
             wall = time.monotonic() - t0
             total_wall += wall
@@ -296,12 +251,9 @@ def _pagerank(
                 it,
                 l1_delta=l1 if l1 != float("inf") else None,
                 wall_s=round(wall, 4),
-                rounds_in_job=steps,
                 edges=edge_count,
                 vertices=n,
-                edges_per_sec=(
-                    round(steps * edge_count / wall, 1) if wall > 0 else None
-                ),
+                edges_per_sec=round(edge_count / wall, 1) if wall > 0 else None,
             )
             if ckpt and (it % checkpoint_interval == 0):
                 ckpt.save(ranks, it, {"l1": l1, "alpha": alpha, "tol": tol})

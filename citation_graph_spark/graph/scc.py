@@ -53,7 +53,7 @@ from pyspark.sql import functions as F
 from citation_graph_spark.graph.degrees import auto_partitions
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import (
-    iterative_kernel_conf,
+    iterative_kernel,
     shuffle_partitions_conf,
 )
 
@@ -99,10 +99,10 @@ def _local_scc_arrays(src, dst, vids):
     return order, scc
 
 
+@iterative_kernel
 def strongly_connected_components(
     edges: DataFrame,
     vertices: DataFrame | None = None,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
     local_finish_rows: int = _LOCAL_FINISH_EDGE_ROWS,
     max_outer: int = 64,
@@ -110,27 +110,6 @@ def strongly_connected_components(
 ) -> DataFrame:
     """Returns ``(vid: long, scc: long)``; scc = max vid in the
     strongly connected component (isolated vertices are their own)."""
-    with iterative_kernel_conf(edges.sparkSession):
-        return _scc(
-            edges,
-            vertices,
-            num_partitions,
-            metrics_path,
-            local_finish_rows,
-            max_outer,
-            max_inner,
-        )
-
-
-def _scc(
-    edges: DataFrame,
-    vertices: DataFrame | None,
-    num_partitions: int | None,
-    metrics_path: str | None,
-    local_finish_rows: int,
-    max_outer: int,
-    max_inner: int,
-) -> DataFrame:
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "scc")
 
@@ -145,8 +124,7 @@ def _scc(
     e = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
     e = e.distinct().localCheckpoint(eager=True)
     n_edges = e.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, max(n_edges, 1))
+    num_partitions = auto_partitions(spark, max(n_edges, 1))
 
     if n_edges <= local_finish_rows:
         return _finish_local(e, vertices)

@@ -68,7 +68,7 @@ from citation_graph_spark.checkpointing import CheckpointManager
 from citation_graph_spark.graph.degrees import auto_partitions, undirect
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import (
-    iterative_kernel_conf,
+    iterative_kernel,
     shuffle_partitions_conf,
 )
 
@@ -104,10 +104,10 @@ def fiedler_round_lineage(syms: DataFrame, x: DataFrame) -> DataFrame:
     )
 
 
+@iterative_kernel
 def fiedler_scores(
     edges: DataFrame,
     max_iter: int = 40,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
     checkpoint_dir: str | None = None,
     checkpoint_interval: int = 8,
@@ -122,142 +122,130 @@ def fiedler_scores(
     connectivity (see ``spectral_bisect``); on a disconnected input the
     result is still deterministic and oracle-replayable, just not a
     Fiedler vector of anything."""
-    with iterative_kernel_conf(edges.sparkSession):
-        spark = edges.sparkSession
-        metrics = MetricsLogger(metrics_path, "fiedler")
-        ckpt = (
-            CheckpointManager(checkpoint_dir, "fiedler")
-            if checkpoint_dir
-            else None
-        )
-        sym = undirect(edges.select("src", "dst"))
-        deg = sym.groupBy(F.col("src").alias("vid")).agg(
-            F.count(F.lit(1)).alias("deg")
-        )
-        stats = deg.agg(
-            F.max("deg").alias("dmax"), F.count(F.lit(1)).alias("n")
-        ).first()
-        sigma = int(stats["dmax"]) + 1
-        n = int(stats["n"])
-        if num_partitions is None:
-            num_partitions = auto_partitions(spark, sym.count())
-        # self-loop rows carry σ − deg(v); neighbor rows carry 1
-        syms = (
-            sym.select("src", "dst", F.lit(1).cast("long").alias("w"))
-            .unionByName(
-                deg.select(
-                    F.col("vid").alias("src"),
-                    F.col("vid").alias("dst"),
-                    (F.lit(sigma) - F.col("deg")).cast("long").alias("w"),
-                )
+    spark = edges.sparkSession
+    metrics = MetricsLogger(metrics_path, "fiedler")
+    ckpt = (
+        CheckpointManager(checkpoint_dir, "fiedler")
+        if checkpoint_dir
+        else None
+    )
+    sym = undirect(edges.select("src", "dst"))
+    deg = sym.groupBy(F.col("src").alias("vid")).agg(
+        F.count(F.lit(1)).alias("deg")
+    )
+    stats = deg.agg(
+        F.max("deg").alias("dmax"), F.count(F.lit(1)).alias("n")
+    ).first()
+    sigma = int(stats["dmax"]) + 1
+    n = int(stats["n"])
+    num_partitions = auto_partitions(spark, sym.count())
+    # self-loop rows carry σ − deg(v); neighbor rows carry 1
+    syms = (
+        sym.select("src", "dst", F.lit(1).cast("long").alias("w"))
+        .unionByName(
+            deg.select(
+                F.col("vid").alias("src"),
+                F.col("vid").alias("dst"),
+                (F.lit(sigma) - F.col("deg")).cast("long").alias("w"),
             )
-            .repartition(num_partitions, "dst")
-            .persist()
         )
-        syms.count()
+        .repartition(num_partitions, "dst")
+        .persist()
+    )
+    syms.count()
 
-        start_iter = 0
-        x = None
-        if ckpt and resume:
-            loaded = ckpt.load(spark)
-            if loaded is not None:
-                saved, manifest = loaded
-                start_iter = manifest["iteration"]
+    x, start_iter = (
+        ckpt.restore(spark, "vid", num_partitions) if ckpt and resume else (None, 0)
+    )
+    if x is None:
+        # deterministic non-constant seed, guaranteed not the
+        # all-ones direction; magnitude already within scale.
+        # z seeds as the seed value itself (no projection exists
+        # before round 1; the final z always comes from a round).
+        x = (
+            deg.select(
+                "vid",
+                ((F.col("vid") % 7) - F.lit(3))
+                .cast("long")
+                .alias("x"),
+                ((F.col("vid") % 7) - F.lit(3))
+                .cast("long")
+                .alias("z"),
+            )
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
+
+    with shuffle_partitions_conf(spark, num_partitions):
+        for it in range(start_iter + 1, max_iter + 1):
+            t0 = time.monotonic()
+            y = fiedler_round_lineage(syms, x)
+            agg = y.agg(
+                F.sum("y").alias("s"),
+                F.min(F.lit(n) * F.col("y")).alias("zl"),
+                F.max(F.lit(n) * F.col("y")).alias("zh"),
+            ).first()
+            s, zl, zh = int(agg["s"]), int(agg["zl"]), int(agg["zh"])
+            zmin, zmax = zl - s, zh - s
+            # z = n·y − Σy is the exact-integer deflated projection
+            # BEFORE the min-shift rescale; its sign is the classic
+            # Fiedler sign (the rescale's zero sits at the z
+            # MIDRANGE, so thresholding x>0 on a skewed score
+            # distribution is NOT the sign cut — carry z so the
+            # bisector can threshold the true zero crossing)
+            zcol = (F.lit(n) * F.col("y") - F.lit(s)).cast("long")
+            if zmax == zmin:
                 x = (
-                    saved.select("vid", "x", "z")
+                    y.select(
+                        "vid",
+                        F.lit(0).cast("long").alias("x"),
+                        zcol.alias("z"),
+                    )
                     .repartition(num_partitions, "vid")
                     .localCheckpoint(eager=True)
                 )
-        if x is None:
-            # deterministic non-constant seed, guaranteed not the
-            # all-ones direction; magnitude already within scale.
-            # z seeds as the seed value itself (no projection exists
-            # before round 1; the final z always comes from a round).
-            x = (
-                deg.select(
-                    "vid",
-                    ((F.col("vid") % 7) - F.lit(3))
-                    .cast("long")
-                    .alias("x"),
-                    ((F.col("vid") % 7) - F.lit(3))
-                    .cast("long")
-                    .alias("z"),
-                )
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
-            )
-
-        with shuffle_partitions_conf(spark, num_partitions):
-            for it in range(start_iter + 1, max_iter + 1):
-                t0 = time.monotonic()
-                y = fiedler_round_lineage(syms, x)
-                agg = y.agg(
-                    F.sum("y").alias("s"),
-                    F.min(F.lit(n) * F.col("y")).alias("zl"),
-                    F.max(F.lit(n) * F.col("y")).alias("zh"),
-                ).first()
-                s, zl, zh = int(agg["s"]), int(agg["zl"]), int(agg["zh"])
-                zmin, zmax = zl - s, zh - s
-                # z = n·y − Σy is the exact-integer deflated projection
-                # BEFORE the min-shift rescale; its sign is the classic
-                # Fiedler sign (the rescale's zero sits at the z
-                # MIDRANGE, so thresholding x>0 on a skewed score
-                # distribution is NOT the sign cut — carry z so the
-                # bisector can threshold the true zero crossing)
-                zcol = (F.lit(n) * F.col("y") - F.lit(s)).cast("long")
-                if zmax == zmin:
-                    x = (
-                        y.select(
-                            "vid",
-                            F.lit(0).cast("long").alias("x"),
-                            zcol.alias("z"),
-                        )
-                        .repartition(num_partitions, "vid")
-                        .localCheckpoint(eager=True)
+            else:
+                spread = zmax - zmin
+                if spread <= FIEDLER_SAFE_SPREAD:
+                    x_expr = (
+                        f"div(({n}L * y - {s}L - {zmin}L)"
+                        f" * {2 * FIEDLER_SCALE}L,"
+                        f" {spread}L)"
                     )
                 else:
-                    spread = zmax - zmin
-                    if spread <= FIEDLER_SAFE_SPREAD:
-                        x_expr = (
-                            f"div(({n}L * y - {s}L - {zmin}L)"
-                            f" * {2 * FIEDLER_SCALE}L,"
-                            f" {spread}L)"
-                        )
-                    else:
-                        x_expr = (
-                            f"div(div({n}L * y - {s}L - {zmin}L,"
-                            f" {FIEDLER_SHIFT}L)"
-                            f" * {2 * FIEDLER_SCALE}L,"
-                            f" {max(spread // FIEDLER_SHIFT, 1)}L)"
-                        )
-                    x = (
-                        y.select(
-                            "vid",
-                            (F.expr(x_expr) - F.lit(FIEDLER_SCALE))
-                            .cast("long")
-                            .alias("x"),
-                            zcol.alias("z"),
-                        )
-                        .repartition(num_partitions, "vid")
-                        .localCheckpoint(eager=True)
+                    x_expr = (
+                        f"div(div({n}L * y - {s}L - {zmin}L,"
+                        f" {FIEDLER_SHIFT}L)"
+                        f" * {2 * FIEDLER_SCALE}L,"
+                        f" {max(spread // FIEDLER_SHIFT, 1)}L)"
                     )
-                metrics.log(
-                    it,
-                    wall_s=round(time.monotonic() - t0, 4),
-                    z_spread=zmax - zmin,
+                x = (
+                    y.select(
+                        "vid",
+                        (F.expr(x_expr) - F.lit(FIEDLER_SCALE))
+                        .cast("long")
+                        .alias("x"),
+                        zcol.alias("z"),
+                    )
+                    .repartition(num_partitions, "vid")
+                    .localCheckpoint(eager=True)
                 )
-                if ckpt and (
-                    it % checkpoint_interval == 0 or it == max_iter
-                ):
-                    ckpt.save(x, it, meta={"max_iter": max_iter})
-        syms.unpersist()
-        return x.select("vid", F.col("x").alias("score_q4"), "z")
+            metrics.log(
+                it,
+                wall_s=round(time.monotonic() - t0, 4),
+                z_spread=zmax - zmin,
+            )
+            if ckpt and (
+                it % checkpoint_interval == 0 or it == max_iter
+            ):
+                ckpt.save(x, it, meta={"max_iter": max_iter})
+    syms.unpersist()
+    return x.select("vid", F.col("x").alias("score_q4"), "z")
 
 
 def spectral_bisect(
     edges: DataFrame,
     max_iter: int = 40,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
 ) -> DataFrame:
     """Fiedler-sign bisection of the LARGEST connected component
@@ -292,10 +280,7 @@ def spectral_bisect(
         .localCheckpoint(eager=True)
     )
     scores = fiedler_scores(
-        comp_edges,
-        max_iter=max_iter,
-        num_partitions=num_partitions,
-        metrics_path=metrics_path,
+        comp_edges, max_iter=max_iter, metrics_path=metrics_path
     )
     return scores.select(
         "vid",
@@ -308,7 +293,6 @@ def refine_bisection(
     edges: DataFrame,
     sides: DataFrame,
     rounds: int = 5,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Deterministic parallel cut refinement (the Fiduccia–Mattheyses
     move step, synchronized): per round, every vertex computes its
@@ -329,8 +313,7 @@ def refine_bisection(
     """
     spark = edges.sparkSession
     sym = undirect(edges.select("src", "dst"))
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, sym.count())
+    num_partitions = auto_partitions(spark, sym.count())
     sym = sym.repartition(num_partitions, "dst").persist()
     sym.count()
     state = (

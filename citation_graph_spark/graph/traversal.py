@@ -32,20 +32,20 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.graph.degrees import auto_partitions, undirect
+from citation_graph_spark.graph.degrees import pin_edges, undirect
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import (
-    iterative_kernel_conf,
+    iterative_kernel,
     shuffle_partitions_conf,
 )
 
 
+@iterative_kernel
 def bfs_distances(
     edges: DataFrame,
     seeds: DataFrame,
     max_iter: int = 30,
     directed: bool = False,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
 ) -> DataFrame:
     """Multi-source BFS: ``(vid: long, dist: int)`` for every vertex
@@ -57,33 +57,13 @@ def bfs_distances(
     joins only the NEW frontier against the cached edges and anti-joins
     already-settled vertices away.
     """
-    with iterative_kernel_conf(edges.sparkSession):
-        return _bfs(
-            edges, seeds, max_iter, directed, num_partitions, metrics_path
-        )
-
-
-def _bfs(
-    edges: DataFrame,
-    seeds: DataFrame,
-    max_iter: int,
-    directed: bool,
-    num_partitions: int | None,
-    metrics_path: str | None,
-) -> DataFrame:
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "bfs")
 
     e0 = edges.select("src", "dst") if directed else undirect(edges).select(
         "src", "dst"
     )
-    e0 = e0.persist()
-    n_edges = e0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_edges)
-    e = e0.repartition(num_partitions, "src").persist()
-    e.count()
-    e0.unpersist()
+    e, _, num_partitions = pin_edges(e0)
 
     dist = (
         seeds.select("vid")
@@ -122,12 +102,12 @@ def _bfs(
     return dist
 
 
+@iterative_kernel
 def bfs_per_source(
     edges: DataFrame,
     seeds: DataFrame,
     max_iter: int = 30,
     directed: bool = False,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Per-source BFS: ``(seed: long, vid: long, dist: int)`` — the
     full distance table from EACH seed separately (the multi-source
@@ -141,30 +121,11 @@ def bfs_per_source(
     on web-scale graphs: exact per-source distances for a K-seed
     sample instead of O(n) BFS runs (cf. the harmonic-centrality query
     built on it)."""
-    with iterative_kernel_conf(edges.sparkSession):
-        return _bfs_per_source(
-            edges, seeds, max_iter, directed, num_partitions
-        )
-
-
-def _bfs_per_source(
-    edges: DataFrame,
-    seeds: DataFrame,
-    max_iter: int,
-    directed: bool,
-    num_partitions: int | None,
-) -> DataFrame:
     spark = edges.sparkSession
     e0 = edges.select("src", "dst") if directed else undirect(edges).select(
         "src", "dst"
     )
-    e0 = e0.persist()
-    n_edges = e0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_edges)
-    e = e0.repartition(num_partitions, "src").persist()
-    e.count()
-    e0.unpersist()
+    e, _, num_partitions = pin_edges(e0)
 
     dist = (
         seeds.select("vid")
@@ -202,12 +163,12 @@ def _bfs_per_source(
     return dist
 
 
+@iterative_kernel
 def sssp(
     edges: DataFrame,
     seeds: DataFrame,
     max_iter: int = 30,
     directed: bool = False,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
 ) -> DataFrame:
     """Multi-source weighted shortest paths (non-negative integer edge
@@ -224,20 +185,6 @@ def sssp(
     new in round r) while doing frontier-proportional work — the same
     property that makes BFS above scale.
     """
-    with iterative_kernel_conf(edges.sparkSession):
-        return _sssp(
-            edges, seeds, max_iter, directed, num_partitions, metrics_path
-        )
-
-
-def _sssp(
-    edges: DataFrame,
-    seeds: DataFrame,
-    max_iter: int,
-    directed: bool,
-    num_partitions: int | None,
-    metrics_path: str | None,
-) -> DataFrame:
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "sssp")
 
@@ -250,13 +197,7 @@ def _sssp(
                 F.col("weight").cast("long").alias("w"),
             )
         )
-    e0 = e0.persist()
-    n_edges = e0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_edges)
-    e = e0.repartition(num_partitions, "src").persist()
-    e.count()
-    e0.unpersist()
+    e, _, num_partitions = pin_edges(e0)
 
     dist = (
         seeds.select("vid")
@@ -316,12 +257,12 @@ def _sssp(
     return dist
 
 
+@iterative_kernel
 def personalized_pagerank(
     edges: DataFrame,
     seeds: DataFrame,
     alpha: float = 0.85,
     max_iter: int = 20,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
 ) -> DataFrame:
     """Personalized PageRank: teleport (and dangling) mass returns to
@@ -331,20 +272,6 @@ def personalized_pagerank(
     ``(vid: long, score: double)`` over all vertices that appear as an
     edge endpoint or a seed; Σ score = 1.
     """
-    with iterative_kernel_conf(edges.sparkSession):
-        return _ppr(
-            edges, seeds, alpha, max_iter, num_partitions, metrics_path
-        )
-
-
-def _ppr(
-    edges: DataFrame,
-    seeds: DataFrame,
-    alpha: float,
-    max_iter: int,
-    num_partitions: int | None,
-    metrics_path: str | None,
-) -> DataFrame:
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "personalized_pagerank")
 
@@ -360,14 +287,8 @@ def _ppr(
     e0 = (
         edges.join(out_deg, "src")
         .select("src", "dst", (F.col("weight") / F.col("_wout")).alias("wnorm"))
-        .persist()
     )
-    n_edges = e0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_edges)
-    e = e0.repartition(num_partitions, "src").persist()
-    e.count()
-    e0.unpersist()
+    e, n_edges, num_partitions = pin_edges(e0)
 
     vertices = (
         edges.select(F.col("src").alias("vid"))
@@ -446,12 +367,12 @@ def _ppr(
 _WIDEST_INF = 4611686018427387904  # 2^62 — internal "unbounded" capacity
 
 
+@iterative_kernel
 def widest_paths(
     edges: DataFrame,
     seeds: DataFrame,
     max_iter: int = 30,
     directed: bool = False,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
 ) -> DataFrame:
     """Multi-source widest (bottleneck / maximum-capacity) paths over
@@ -469,20 +390,6 @@ def widest_paths(
     the frontier argument carries over verbatim): each round relaxes
     only the out-edges of vertices whose width improved last round.
     """
-    with iterative_kernel_conf(edges.sparkSession):
-        return _widest(
-            edges, seeds, max_iter, directed, num_partitions, metrics_path
-        )
-
-
-def _widest(
-    edges: DataFrame,
-    seeds: DataFrame,
-    max_iter: int,
-    directed: bool,
-    num_partitions: int | None,
-    metrics_path: str | None,
-) -> DataFrame:
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "widest")
 
@@ -495,13 +402,7 @@ def _widest(
                 F.col("weight").cast("long").alias("w"),
             )
         )
-    e0 = e0.persist()
-    n_edges = e0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_edges)
-    e = e0.repartition(num_partitions, "src").persist()
-    e.count()
-    e0.unpersist()
+    e, _, num_partitions = pin_edges(e0)
 
     cap = (
         seeds.select("vid")

@@ -15,10 +15,11 @@ for correctness-at-scale first:
 
 from __future__ import annotations
 
+import functools
 import os
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 @contextmanager
@@ -58,6 +59,22 @@ def iterative_kernel_conf(spark: SparkSession):
         yield
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
+
+
+def iterative_kernel(fn):
+    """Decorator: run a graph kernel under ``iterative_kernel_conf``,
+    on the session of the kernel's first DataFrame argument — the one
+    place the kernels' conf policy is applied."""
+
+    @functools.wraps(fn)
+    def run(*args, **kwargs):
+        df = next(
+            a for a in (*args, *kwargs.values()) if isinstance(a, DataFrame)
+        )
+        with iterative_kernel_conf(df.sparkSession):
+            return fn(*args, **kwargs)
+
+    return run
 
 
 def default_parallelism() -> int:

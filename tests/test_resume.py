@@ -61,6 +61,31 @@ def test_components_kill_resume_identical(spark, tmp_path):
     assert resumed == full
 
 
+def test_components_resume_at_round_cap_returns_snapshot(spark, tmp_path):
+    # a 10-vertex path needs 9 min-label rounds; the capped run stops at
+    # 3 with a durable snapshot, and resuming under the same cap runs no
+    # round — the snapshot itself is the answer
+    el = [(i, i + 1) for i in range(9)]
+    edges = edges_df(spark, el)
+    verts = vertices_df(spark, 10)
+    ck = str(tmp_path / "ck")
+    kw = dict(max_iter=3, checkpoint_dir=ck, local_finish_edges=0)
+
+    capped = (
+        connected_components(edges, verts, checkpoint_interval=1, **kw)
+        .orderBy("vid")
+        .toPandas()["component"]
+        .tolist()
+    )
+    resumed = (
+        connected_components(edges, verts, resume=True, **kw)
+        .orderBy("vid")
+        .toPandas()["component"]
+        .tolist()
+    )
+    assert resumed == capped == [0, 0, 0, 0, 1, 2, 3, 4, 5, 6]
+
+
 def test_katz_kill_resume_identical(spark, tmp_path):
     from citation_graph_spark.graph.katz import katz_centrality
 
