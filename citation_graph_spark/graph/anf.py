@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.checkpointing import CheckpointManager
+from citation_graph_spark.checkpointing import CheckpointManager, run_rounds
 from citation_graph_spark.graph.degrees import auto_partitions
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import (
@@ -96,25 +96,29 @@ def exact_balls(
         .localCheckpoint(eager=True)
     )
 
-    def counts(r: int) -> DataFrame:
+    def counts(ball: DataFrame, r: int) -> DataFrame:
         return ball.groupBy(F.col("v").alias("vid")).agg(
             F.count(F.lit(1)).alias("ball")
         ).withColumn("r", F.lit(r))
 
-    out = counts(0)
-    with shuffle_partitions_conf(spark, num_partitions):
-        for r in range(1, radius + 1):
-            grown = (
-                ball.join(e, ball["u"] == e["src"])
-                .select("v", F.col("dst").alias("u"))
-            )
-            ball = (
-                ball.unionByName(grown)
-                .distinct()
-                .repartition(num_partitions, "v")
-                .localCheckpoint(eager=True)
-            )
-            out = out.unionByName(counts(r))
+    def step(r: int, st: tuple[DataFrame, DataFrame]):
+        ball, out = st
+        grown = (
+            ball.join(e, ball["u"] == e["src"])
+            .select("v", F.col("dst").alias("u"))
+        )
+        ball = (
+            ball.unionByName(grown)
+            .distinct()
+            .repartition(num_partitions, "v")
+            .localCheckpoint(eager=True)
+        )
+        return (ball, out.unionByName(counts(ball, r))), {}, False
+
+    (_, out), _, _ = run_rounds(
+        step, (ball, counts(ball, 0)), kernel="exact_balls",
+        num_partitions=num_partitions, max_iter=radius,
+    )
     e.unpersist()
     return out.select("vid", "r", "ball")
 

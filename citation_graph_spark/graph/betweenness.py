@@ -34,17 +34,12 @@ scalars. K pivots multiply message volume K-fold, independent of n.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from citation_graph_spark.checkpointing import run_rounds
 from citation_graph_spark.graph.degrees import pin_edges, undirect
-from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import iterative_kernel
 
 
 def forward_round_lineage(
@@ -213,9 +208,6 @@ def _brandes_state(
     where ``e`` is the cached undirected edge closure (caller
     unpersists), ``verts`` its vertex set, and ``done`` the full
     per-(pivot, vertex) state (s, vid, dist, sigma, delta)."""
-    spark = edges.sparkSession
-    metrics = MetricsLogger(metrics_path, "betweenness")
-
     e, _, num_partitions = pin_edges(undirect(edges).select("src", "dst"))
 
     verts = (
@@ -239,25 +231,26 @@ def _brandes_state(
         .repartition(num_partitions, "s", "vid")
         .localCheckpoint(eager=True)
     )
-    frontier = reach
-    lmax = 0
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(1, max_iter + 1):
-            t0 = time.monotonic()
-            new = (
-                forward_round_lineage(e, frontier, reach, it)
-                .repartition(num_partitions, "s", "vid")
-                .localCheckpoint(eager=True)
-            )
-            n_new = new.count()
-            metrics.log(
-                it, frontier=n_new, wall_s=round(time.monotonic() - t0, 4)
-            )
-            if n_new == 0:
-                break
-            lmax = it
-            reach = reach.unionByName(new).localCheckpoint(eager=True)
-            frontier = new
+
+    def forward(it: int, st: tuple[DataFrame, DataFrame]):
+        reach, frontier = st
+        new = (
+            forward_round_lineage(e, frontier, reach, it)
+            .repartition(num_partitions, "s", "vid")
+            .localCheckpoint(eager=True)
+        )
+        n_new = new.count()
+        if n_new == 0:
+            return st, {"frontier": 0}, True
+        reach = reach.unionByName(new).localCheckpoint(eager=True)
+        return (reach, new), {"frontier": n_new}, False
+
+    (reach, _), it, stalled = run_rounds(
+        forward, (reach, reach), kernel="betweenness",
+        num_partitions=num_partitions, max_iter=max_iter,
+        metrics_path=metrics_path,
+    )
+    lmax = it - 1 if stalled else it  # deepest level reached
 
     # ---- backward: descending-level dependency accumulation --------
     done = (
@@ -265,18 +258,19 @@ def _brandes_state(
         .withColumn("delta", F.lit(0.0))
         .localCheckpoint(eager=True)
     )
-    with shuffle_partitions_conf(spark, num_partitions):
-        for lvl in range(lmax - 1, -1, -1):
-            t0 = time.monotonic()
-            cur = reach.filter(F.col("dist") == lvl)
-            lvl_rows = backward_round_lineage(e, done, cur, lvl).repartition(
-                num_partitions, "s", "vid"
-            )
-            done = done.unionByName(lvl_rows).localCheckpoint(eager=True)
-            metrics.log(
-                lmax - lvl,
-                level=lvl,
-                wall_s=round(time.monotonic() - t0, 4),
-            )
+
+    def backward(it: int, done: DataFrame):
+        lvl = lmax - it
+        cur = reach.filter(F.col("dist") == lvl)
+        lvl_rows = backward_round_lineage(e, done, cur, lvl).repartition(
+            num_partitions, "s", "vid"
+        )
+        done = done.unionByName(lvl_rows).localCheckpoint(eager=True)
+        return done, {"level": lvl}, False
+
+    done, _, _ = run_rounds(
+        backward, done, kernel="betweenness", num_partitions=num_partitions,
+        max_iter=lmax, metrics_path=metrics_path,
+    )
 
     return e, verts, done

@@ -31,19 +31,13 @@ the driver sees only scalar counts.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.checkpointing import CheckpointManager
+from citation_graph_spark.checkpointing import resume_point, run_rounds
 from citation_graph_spark.graph.degrees import pin_edges, undirect
 from citation_graph_spark.graph.mis import mis_round_lineage
-from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import iterative_kernel
 
 # mex of a sorted ascending distinct color array: first gap, else size
 _MEX_FOLD = (
@@ -148,12 +142,6 @@ def greedy_coloring(
     if local_finish_rows is None:
         local_finish_rows = _LOCAL_FINISH_ROWS
     spark = edges.sparkSession
-    metrics = MetricsLogger(metrics_path, "coloring")
-    ckpt = (
-        CheckpointManager(checkpoint_dir, "coloring")
-        if checkpoint_dir
-        else None
-    )
 
     e, _, num_partitions = pin_edges(undirect(edges).select("src", "dst"))
 
@@ -163,8 +151,8 @@ def greedy_coloring(
         .repartition(num_partitions, "vid")
         .localCheckpoint(eager=True)
     )
-    colored, start_iter = (
-        ckpt.restore(spark, "vid", num_partitions) if ckpt and resume else (None, 0)
+    ckpt, colored, start_iter = resume_point(
+        spark, checkpoint_dir, "coloring", resume, "vid", num_partitions
     )
     if colored is None:
         colored = spark.createDataFrame(
@@ -175,91 +163,81 @@ def greedy_coloring(
     ).localCheckpoint(eager=True)
     n_active = active.count()
 
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(start_iter + 1, max_iter + 1):
-            if n_active == 0:
-                break
-            t0 = time.monotonic()
-            if local_finish_rows:
-                inc = e.join(
-                    active.select(F.col("vid").alias("src")),
-                    "src",
-                    "left_semi",
+    def step(it: int, st: tuple[DataFrame, DataFrame, int]):
+        colored, active, n_active = st
+        if local_finish_rows:
+            inc = e.join(
+                active.select(F.col("vid").alias("src")),
+                "src",
+                "left_semi",
+            )
+            if inc.count() <= local_finish_rows:
+                # the endgame replays every remaining round at once
+                inc_rows = [(r["src"], r["dst"]) for r in inc.collect()]
+                act_vids = [r["vid"] for r in active.collect()]
+                col_rows = [(r["vid"], r["color"]) for r in colored.collect()]
+                new = _finish_local_coloring(
+                    inc_rows, act_vids, col_rows, it, max_iter
                 )
-                if inc.count() <= local_finish_rows:
-                    inc_rows = [
-                        (r["src"], r["dst"]) for r in inc.collect()
-                    ]
-                    act_vids = [r["vid"] for r in active.collect()]
-                    col_rows = [
-                        (r["vid"], r["color"]) for r in colored.collect()
-                    ]
-                    new = _finish_local_coloring(
-                        inc_rows, act_vids, col_rows, it, max_iter
-                    )
-                    if new:
-                        colored = colored.unionByName(
-                            spark.createDataFrame(
-                                new,
-                                "vid long, color long, color_round long",
-                            )
-                        ).localCheckpoint(eager=True)
-                    metrics.log(
-                        it,
-                        winners=len(new),
-                        active=len(act_vids) - len(new),
-                        endgame=1,
-                        wall_s=round(time.monotonic() - t0, 4),
-                    )
-                    n_active = 0
-                    break
-            winners = mis_round_lineage(e, active, it).localCheckpoint(
-                eager=True
+                if new:
+                    colored = colored.unionByName(
+                        spark.createDataFrame(
+                            new, "vid long, color long, color_round long"
+                        )
+                    ).localCheckpoint(eager=True)
+                fields = {
+                    "winners": len(new),
+                    "active": len(act_vids) - len(new),
+                    "endgame": 1,
+                }
+                return (colored, active, 0), fields, True
+        winners = mis_round_lineage(e, active, it).localCheckpoint(eager=True)
+        # mex over already-colored neighbors of each winner
+        nb_colors = (
+            e.join(
+                winners.select(F.col("vid").alias("src")),
+                "src",
+                "left_semi",
             )
-            # mex over already-colored neighbors of each winner
-            nb_colors = (
-                e.join(
-                    winners.select(F.col("vid").alias("src")),
-                    "src",
-                    "left_semi",
-                )
-                .join(
-                    colored.select(F.col("vid").alias("dst"), "color"),
-                    "dst",
-                )
-                .groupBy("src")
-                .agg(F.sort_array(F.collect_set("color")).alias("cs"))
-                .select(
-                    F.col("src").alias("vid"),
-                    F.expr(_MEX_FOLD).alias("mex"),
-                )
+            .join(
+                colored.select(F.col("vid").alias("dst"), "color"),
+                "dst",
             )
-            won = winners.join(nb_colors, "vid", "left").select(
-                "vid",
-                F.coalesce("mex", F.lit(0)).cast("long").alias("color"),
-                F.lit(it).cast("long").alias("color_round"),
+            .groupBy("src")
+            .agg(F.sort_array(F.collect_set("color")).alias("cs"))
+            .select(
+                F.col("src").alias("vid"),
+                F.expr(_MEX_FOLD).alias("mex"),
             )
-            colored = colored.unionByName(won)
-            colored = colored.repartition(
-                num_partitions, "vid"
-            ).localCheckpoint(eager=True)
-            active = (
-                active.join(winners, "vid", "left_anti")
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
-            )
-            n_next = active.count()
-            metrics.log(
-                it,
-                winners=n_active - n_next,
-                active=n_next,
-                wall_s=round(time.monotonic() - t0, 4),
-            )
-            n_active = n_next
-            if ckpt and (
-                it % checkpoint_interval == 0 or n_active == 0
-            ):
-                ckpt.save(colored, it, {"n_active": n_active})
+        )
+        won = winners.join(nb_colors, "vid", "left").select(
+            "vid",
+            F.coalesce("mex", F.lit(0)).cast("long").alias("color"),
+            F.lit(it).cast("long").alias("color_round"),
+        )
+        colored = (
+            colored.unionByName(won)
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
+        active = (
+            active.join(winners, "vid", "left_anti")
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
+        n_next = active.count()
+        fields = {"winners": n_active - n_next, "active": n_next}
+        return (colored, active, n_next), fields, n_next == 0
+
+    # the snapshot of round ``it`` holds the vertices colored up to it: an
+    # endgame round also holds the later rounds it replayed
+    if n_active:
+        (colored, _, _), _, _ = run_rounds(
+            step, (colored, active, n_active), kernel="coloring",
+            num_partitions=num_partitions, start=start_iter, max_iter=max_iter,
+            metrics_path=metrics_path, ckpt=ckpt, interval=checkpoint_interval,
+            snapshot=lambda st, it: st[0].filter(F.col("color_round") <= it),
+        )
 
     return verts.join(colored, "vid", "left").select(
         "vid",

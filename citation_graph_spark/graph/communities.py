@@ -22,17 +22,12 @@ argmax. Labels stay hash-partitioned on vid between rounds.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from citation_graph_spark.checkpointing import run_rounds
 from citation_graph_spark.graph.degrees import pin_edges, undirect
-from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import iterative_kernel
 
 
 @iterative_kernel
@@ -50,9 +45,6 @@ def label_propagation(
     of 1 (weights cast to BIGINT — integer-exact sums keep the argmax
     deterministic cross-engine; same desc-total, asc-label tie-break).
     """
-    spark = edges.sparkSession
-    metrics = MetricsLogger(metrics_path, "label_propagation")
-
     if weighted:
         # Votes are summed in BIGINT for cross-engine-exact argmax, so
         # weights must be integral — a silent cast would truncate 0.7
@@ -93,38 +85,36 @@ def label_propagation(
         .localCheckpoint(eager=True)
     )
 
-    # in-loop shuffles run at the kernel's data-proportional width
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(max_iter):
-            t0 = time.monotonic()
-            msg_cols = [F.col("dst"), F.col("label").alias("nbr_label")] + (
-                [F.col("w")] if weighted else []
+    def step(it: int, labels: DataFrame):
+        msg_cols = [F.col("dst"), F.col("label").alias("nbr_label")] + (
+            [F.col("w")] if weighted else []
+        )
+        msgs = und.join(labels, und["src"] == labels["vid"]).select(*msg_cols)
+        vote = F.sum("w") if weighted else F.count(F.lit(1))
+        counts = msgs.groupBy("dst", "nbr_label").agg(vote.alias("n"))
+        w = Window.partitionBy("dst").orderBy(F.desc("n"), F.asc("nbr_label"))
+        winner = (
+            counts.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .select("dst", F.col("nbr_label").alias("new_label"))
+        )
+        new_labels = (
+            labels.join(winner, labels["vid"] == winner["dst"], "left")
+            .select(
+                labels["vid"],
+                F.coalesce("new_label", labels["label"]).alias("label"),
+                labels["label"].alias("_prev"),
             )
-            msgs = und.join(labels, und["src"] == labels["vid"]).select(*msg_cols)
-            vote = F.sum("w") if weighted else F.count(F.lit(1))
-            counts = msgs.groupBy("dst", "nbr_label").agg(vote.alias("n"))
-            w = Window.partitionBy("dst").orderBy(F.desc("n"), F.asc("nbr_label"))
-            winner = (
-                counts.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .select("dst", F.col("nbr_label").alias("new_label"))
-            )
-            new_labels = (
-                labels.join(winner, labels["vid"] == winner["dst"], "left")
-                .select(
-                    labels["vid"],
-                    F.coalesce("new_label", labels["label"]).alias("label"),
-                    labels["label"].alias("_prev"),
-                )
-                # lazy: the convergence count below materializes the
-                # checkpoint — one Spark job per round, not two
-                .localCheckpoint(eager=False)
-            )
-            changed = new_labels.filter(F.col("label") != F.col("_prev")).count()
-            labels = new_labels.drop("_prev")
-            metrics.log(it + 1, changed=changed, wall_s=round(time.monotonic() - t0, 4))
-            if changed == 0:
-                break
+            # lazy: the convergence count below materializes it
+            .localCheckpoint(eager=False)
+        )
+        changed = new_labels.filter(F.col("label") != F.col("_prev")).count()
+        return new_labels.drop("_prev"), {"changed": changed}, changed == 0
 
+    labels, _, _ = run_rounds(
+        step, labels, kernel="label_propagation",
+        num_partitions=num_partitions, max_iter=max_iter,
+        metrics_path=metrics_path,
+    )
     und.unpersist()
     return labels.select("vid", "label")

@@ -22,18 +22,12 @@ Both variants return identical assignments (tests assert so).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.checkpointing import CheckpointManager
+from citation_graph_spark.checkpointing import resume_point, run_rounds
 from citation_graph_spark.graph.degrees import auto_partitions, undirect
-from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import iterative_kernel
 
 
 # Below this many collected edge rows the component computation runs as
@@ -166,9 +160,6 @@ def connected_components(
         )
 
     spark = edges.sparkSession
-    metrics = MetricsLogger(metrics_path, "connected_components")
-    ckpt = CheckpointManager(checkpoint_dir, "components") if checkpoint_dir else None
-
     und0 = undirect(edges).persist()
     n_und = und0.count()
     # driver-trivial graph and no durable-checkpoint / warm-start
@@ -176,7 +167,7 @@ def connected_components(
     # instead of O(rounds); see _LOCAL_FINISH_UND_ROWS)
     if (
         n_und <= local_finish_edges
-        and ckpt is None
+        and not checkpoint_dir
         and not resume
         and init_labels is None
     ):
@@ -193,7 +184,7 @@ def connected_components(
     if (
         star_contraction is None
         and n_und > star_threshold
-        and ckpt is None
+        and not checkpoint_dir
         and not resume
         and init_labels is None
     ):
@@ -210,8 +201,8 @@ def connected_components(
         vertices = und.select(F.col("src").alias("vid")).distinct()
     vertices = vertices.select("vid")
 
-    labels, start_iter = (
-        ckpt.restore(spark, "vid", num_partitions) if ckpt and resume else (None, 0)
+    ckpt, labels, start_iter = resume_point(
+        spark, checkpoint_dir, "components", resume, "vid", num_partitions
     )
     if labels is None:
         if init_labels is not None:
@@ -231,41 +222,34 @@ def connected_components(
                 .repartition(num_partitions, "vid")
                 .localCheckpoint(eager=True)
             )
-    if start_iter >= max_iter:
-        # resumed at (or past) the round cap: the snapshot is the answer
-        und.unpersist()
-        return labels.select("vid", F.col("label").alias("component"))
 
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(start_iter, max_iter):
-            t0 = time.monotonic()
-            msgs = und.join(labels, und["src"] == labels["vid"]).select(
-                F.col("dst"), F.col("label").alias("nbr_label")
+    def step(it: int, labels: DataFrame):
+        msgs = und.join(labels, und["src"] == labels["vid"]).select(
+            F.col("dst"), F.col("label").alias("nbr_label")
+        )
+        nbr_min = msgs.groupBy("dst").agg(F.min("nbr_label").alias("nbr_min"))
+        new_labels = (
+            labels.join(nbr_min, labels["vid"] == nbr_min["dst"], "left")
+            .select(
+                labels["vid"],
+                F.least(
+                    labels["label"], F.coalesce("nbr_min", labels["label"])
+                ).alias("label"),
+                labels["label"].alias("_prev"),
             )
-            nbr_min = msgs.groupBy("dst").agg(F.min("nbr_label").alias("nbr_min"))
-            new_labels = (
-                labels.join(nbr_min, labels["vid"] == nbr_min["dst"], "left")
-                .select(
-                    labels["vid"],
-                    F.least(
-                        labels["label"], F.coalesce("nbr_min", labels["label"])
-                    ).alias("label"),
-                    labels["label"].alias("_prev"),
-                )
-                # lazy: the convergence count below materializes the
-                # checkpoint — one Spark job per round, not two
-                .localCheckpoint(eager=False)
-            )
-            changed = new_labels.filter(F.col("label") != F.col("_prev")).count()
-            labels = new_labels.drop("_prev")
-            metrics.log(it + 1, changed=changed, wall_s=round(time.monotonic() - t0, 4))
-            if ckpt and ((it + 1) % checkpoint_interval == 0):
-                ckpt.save(labels, it + 1, {"changed": changed})
-            if changed == 0:
-                break
+            # lazy: the convergence count below materializes it
+            .localCheckpoint(eager=False)
+        )
+        changed = new_labels.filter(F.col("label") != F.col("_prev")).count()
+        return new_labels.drop("_prev"), {"changed": changed}, changed == 0
 
-    if ckpt:
-        ckpt.save(labels, it + 1, {"changed": changed, "converged": changed == 0})
+    # resumed at (or past) the round cap: no round runs and the
+    # snapshot is the answer
+    labels, _, _ = run_rounds(
+        step, labels, kernel="connected_components",
+        num_partitions=num_partitions, start=start_iter, max_iter=max_iter,
+        metrics_path=metrics_path, ckpt=ckpt, interval=checkpoint_interval,
+    )
     und.unpersist()
     return labels.select("vid", F.col("label").alias("component"))
 
@@ -287,7 +271,6 @@ def _star_components(
     the edge list itself; converges when the edge list is a star forest.
     """
     spark = edges.sparkSession
-    metrics = MetricsLogger(metrics_path, "connected_components_star")
     und = undirect(edges)
     if vertices is None:
         vertices = und.select(F.col("src").alias("vid")).distinct()
@@ -307,7 +290,6 @@ def _star_components(
             e.select(F.col("u").alias("src"), F.col("v").alias("dst")),
             vertices,
         ).localCheckpoint(eager=True)
-    num_partitions = auto_partitions(spark, n_e)
 
     # Each round SELF-JOINS the evolving edge list twice (nbrs with its
     # own groupBy-min), which SQUARES Catalyst's sizeInBytes estimate —
@@ -320,55 +302,57 @@ def _star_components(
     # stay bounded; caches are freed after the loop — the checkpoint
     # underneath keeps the final edge list recomputable.
     handles = []
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(max_iter):
-            t0 = time.monotonic()
-            # large-star: γ(u) ∪ {u} grouped by u → link every w > u to min
-            nbrs = e.unionByName(
-                e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            )
-            with_min = nbrs.join(
-                nbrs.groupBy("u").agg(F.min("v").alias("m")), "u"
-            ).withColumn("m", F.least("m", "u"))
-            large = (
-                with_min.filter(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .filter(F.col("u") != F.col("v"))
-                .distinct()
-            )
-            # small-star on the result
-            nbrs2 = large.unionByName(
-                large.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            ).filter(F.col("u") > F.col("v"))
-            with_min2 = nbrs2.join(
-                nbrs2.groupBy("u").agg(F.min("v").alias("m")), "u"
-            )
-            small = (
-                with_min2.select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .unionByName(with_min2.select(F.col("u"), F.col("m").alias("v")))
-                .filter(F.col("u") != F.col("v"))
-                .distinct()
-                # lazy: the star-forest check below materializes it
-                .localCheckpoint(eager=False)
-                .persist()
-            )
-            handles.append(small)
-            # converged when small-star output is stable star forest:
-            # every u appears with exactly one v and v is a root (not a
-            # u); this count also materializes small's checkpoint + cache
-            non_star = (
-                small.alias("a")
-                .join(small.alias("b"), F.col("a.v") == F.col("b.u"), "left_semi")
-                .count()
-            )
-            e = small
-            metrics.log(
-                it + 1, non_star=non_star, wall_s=round(time.monotonic() - t0, 4)
-            )
-            if non_star == 0:
-                break
-    for h in handles:
-        h.unpersist()
+
+    def step(it: int, e: DataFrame):
+        # large-star: γ(u) ∪ {u} grouped by u → link every w > u to min
+        nbrs = e.unionByName(
+            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        )
+        with_min = nbrs.join(
+            nbrs.groupBy("u").agg(F.min("v").alias("m")), "u"
+        ).withColumn("m", F.least("m", "u"))
+        large = (
+            with_min.filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
+        )
+        # small-star on the result
+        nbrs2 = large.unionByName(
+            large.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        ).filter(F.col("u") > F.col("v"))
+        with_min2 = nbrs2.join(
+            nbrs2.groupBy("u").agg(F.min("v").alias("m")), "u"
+        )
+        small = (
+            with_min2.select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .unionByName(with_min2.select(F.col("u"), F.col("m").alias("v")))
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
+            # lazy: the star-forest check below materializes it
+            .localCheckpoint(eager=False)
+            .persist()
+        )
+        handles.append(small)
+        # converged when small-star output is stable star forest:
+        # every u appears with exactly one v and v is a root (not a
+        # u); this count also materializes small's checkpoint + cache
+        non_star = (
+            small.alias("a")
+            .join(small.alias("b"), F.col("a.v") == F.col("b.u"), "left_semi")
+            .count()
+        )
+        return small, {"non_star": non_star}, non_star == 0
+
+    try:
+        e, _, _ = run_rounds(
+            step, e, kernel="connected_components_star",
+            num_partitions=auto_partitions(spark, n_e), max_iter=max_iter,
+            metrics_path=metrics_path,
+        )
+    finally:
+        for h in handles:
+            h.unpersist()
 
     comp = e.select(F.col("u").alias("vid"), F.col("v").alias("component"))
     return (

@@ -26,17 +26,12 @@ tens.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from citation_graph_spark.checkpointing import run_rounds
 from citation_graph_spark.graph.degrees import auto_partitions, undirect
-from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import iterative_kernel
 
 # eps = 1/10: keep v iff EPS_NUM * deg(v) * V > EPS_DEN * E_sym,
 # i.e. deg(v) > 2(1+eps) * |E|/|V|  with  2(1+eps) = 22/10 = EPS_DEN/EPS_NUM
@@ -103,8 +98,6 @@ def _peel(
     keep_snapshots: bool,
 ):
     spark = edges.sparkSession
-    metrics = MetricsLogger(metrics_path, "densest_subgraph")
-
     und0 = undirect(edges).select("src", "dst").persist()
     n_sym = und0.count()
     num_partitions = auto_partitions(spark, n_sym)
@@ -115,34 +108,35 @@ def _peel(
 
     rows: list[tuple[int, int, int, int]] = []
     snapshots: dict[int, DataFrame] = {}
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(1, max_iter + 1):
-            t0 = time.monotonic()
-            # the round's one aggregation: surviving degree + V in one pass
-            deg = alive.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-            deg = deg.localCheckpoint(eager=True)
-            n_v = deg.count()
-            if n_v == 0:
-                break
-            n_sym = alive.count()
-            density_micro = 1_000_000 * (n_sym // 2) // n_v
-            rows.append((it, n_v, n_sym // 2, density_micro))
-            if keep_snapshots:
-                snapshots[it] = deg.select(F.col("src").alias("vid"))
-            # keep v iff 10*deg*V > 11*E_sym — pure int64, oracle-identical
-            alive = (
-                peel_round_lineage(alive, deg, n_v, n_sym)
-                .repartition(num_partitions, "src")
-                .localCheckpoint(eager=True)
-            )
-            n_next = alive.count()
-            metrics.log(
-                it,
-                vertices=n_v,
-                sym_edges=n_sym,
-                density_micro=density_micro,
-                wall_s=round(time.monotonic() - t0, 4),
-            )
-            if n_next == 0:
-                break
+
+    def step(it: int, alive: DataFrame):
+        # the round's one aggregation: surviving degree + V in one pass
+        deg = alive.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+        deg = deg.localCheckpoint(eager=True)
+        n_v = deg.count()
+        if n_v == 0:
+            return alive, {"vertices": 0}, True
+        n_sym = alive.count()
+        density_micro = 1_000_000 * (n_sym // 2) // n_v
+        rows.append((it, n_v, n_sym // 2, density_micro))
+        if keep_snapshots:
+            snapshots[it] = deg.select(F.col("src").alias("vid"))
+        # keep v iff 10*deg*V > 11*E_sym — pure int64, oracle-identical
+        alive = (
+            peel_round_lineage(alive, deg, n_v, n_sym)
+            .repartition(num_partitions, "src")
+            .localCheckpoint(eager=True)
+        )
+        n_next = alive.count()
+        fields = {
+            "vertices": n_v,
+            "sym_edges": n_sym,
+            "density_micro": density_micro,
+        }
+        return alive, fields, n_next == 0
+
+    run_rounds(
+        step, alive, kernel="densest_subgraph", num_partitions=num_partitions,
+        max_iter=max_iter, metrics_path=metrics_path,
+    )
     return rows, snapshots

@@ -43,18 +43,12 @@ without a second join.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.checkpointing import CheckpointManager
+from citation_graph_spark.checkpointing import resume_point, run_rounds
 from citation_graph_spark.graph.degrees import auto_partitions, undirect
-from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import iterative_kernel
 
 EV_SCALE = 1000000
 
@@ -95,12 +89,6 @@ def eigenvector_centrality(
     round-trip is exact by construction (stronger than the
     double-precision kernels' IEEE-round-trip argument)."""
     spark = edges.sparkSession
-    metrics = MetricsLogger(metrics_path, "eigenvector")
-    ckpt = (
-        CheckpointManager(checkpoint_dir, "eigenvector")
-        if checkpoint_dir
-        else None
-    )
     sym = undirect(edges.select("src", "dst"))
     verts = sym.select(F.col("src").alias("vid")).distinct()
     sym2 = sym.unionByName(
@@ -111,12 +99,9 @@ def eigenvector_centrality(
     n_edges = sym2.count()
     num_partitions = auto_partitions(spark, n_edges)
 
-    x, start_iter = (
-        ckpt.restore(spark, "vid", num_partitions) if ckpt and resume else (None, 0)
+    ckpt, x, start_iter = resume_point(
+        spark, checkpoint_dir, "eigenvector", resume, "vid", num_partitions
     )
-    if x is not None and start_iter >= max_iter:
-        sym2.unpersist()
-        return x.select("vid", F.col("x").alias("score_ppm"))
     if x is None:
         x = (
             verts.select(
@@ -126,33 +111,26 @@ def eigenvector_centrality(
             .localCheckpoint(eager=True)
         )
 
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(start_iter + 1, max_iter + 1):
-            t0 = time.monotonic()
-            y = eigenvector_round_lineage(sym2, x)
-            m = y.agg(F.max("y")).first()[0]  # scalar-only collect
-            if not m:  # edgeless graph: all mass is gone, stop
-                sym2.unpersist()
-                return x.select(
-                    "vid", F.lit(0).cast("long").alias("score_ppm")
-                )
-            x = (
-                y.select(
-                    "vid",
-                    F.expr(f"div(y * {EV_SCALE}, {m})").alias("x"),
-                )
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
+    def step(it: int, x: DataFrame):
+        y = eigenvector_round_lineage(sym2, x)
+        m = y.agg(F.max("y")).first()[0]  # scalar-only collect
+        if not m:  # edgeless graph: all mass is gone, stop
+            zero = x.select("vid", F.lit(0).cast("long").alias("x"))
+            return zero, {"msgs": n_edges, "max_y": 0}, True
+        x = (
+            y.select(
+                "vid",
+                F.expr(f"div(y * {EV_SCALE}, {m})").alias("x"),
             )
-            metrics.log(
-                it,
-                wall_s=round(time.monotonic() - t0, 4),
-                msgs=n_edges,
-                max_y=int(m),
-            )
-            if ckpt and (
-                it % checkpoint_interval == 0 or it == max_iter
-            ):
-                ckpt.save(x, it, meta={"max_iter": max_iter})
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
+        return x, {"msgs": n_edges, "max_y": int(m)}, False
+
+    x, _, _ = run_rounds(
+        step, x, kernel="eigenvector", num_partitions=num_partitions,
+        start=start_iter, max_iter=max_iter, metrics_path=metrics_path,
+        ckpt=ckpt, interval=checkpoint_interval,
+    )
     sym2.unpersist()
     return x.select("vid", F.col("x").alias("score_ppm"))

@@ -30,17 +30,12 @@ vertex-sized and localCheckpointed per round.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from citation_graph_spark.checkpointing import run_rounds
 from citation_graph_spark.graph.degrees import pin_edges
-from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import iterative_kernel
 
 
 @iterative_kernel
@@ -54,7 +49,6 @@ def hits(
     Σ authority = Σ hub = 1 (L1 normalization each round). Fixed
     ``max_iter`` synchronous rounds."""
     spark = edges.sparkSession
-    metrics = MetricsLogger(metrics_path, "hits")
 
     if vertices is None:
         vertices = (
@@ -89,48 +83,49 @@ def hits(
         .localCheckpoint(eager=True)
     )
 
-    # in-loop shuffles run at the kernel's data-proportional width
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(1, max_iter + 1):
-            t0 = time.monotonic()
-            msgs = e.join(state, e["mfrom"] == state["vid"]).select(
-                F.col("mto"),
-                F.when(F.col("is_fwd"), F.col("h")).otherwise(0.0).alias("ca"),
-                F.when(~F.col("is_fwd"), F.col("a")).otherwise(0.0).alias("ch"),
-            )
-            sums = msgs.groupBy("mto").agg(
-                F.sum("ca").alias("a_raw"), F.sum("ch").alias("h_raw")
-            )
-            # join onto the checkpointed state (it carries the identical
-            # vertex universe) — joining the derived `vertices` here would
-            # recompute its distinct-union-of-edges shuffle every round
-            raw = (
-                state.select("vid")
-                .join(sums, F.col("vid") == sums["mto"], "left")
-                .select(
-                    "vid",
-                    F.coalesce("a_raw", F.lit(0.0)).alias("a_raw"),
-                    F.coalesce("h_raw", F.lit(0.0)).alias("h_raw"),
-                )
-                .repartition(num_partitions, "vid")
-                .persist()
-            )
-            tot = raw.agg(F.sum("a_raw"), F.sum("h_raw")).collect()[0]
-            ta, th = float(tot[0] or 0.0), float(tot[1] or 0.0)
-            if ta == 0.0 or th == 0.0:
-                # edgeless (or one-directional degenerate) graph: scores
-                # cannot renormalize — keep the current state rather than
-                # dividing by zero
-                raw.unpersist()
-                break
-            state = raw.select(
+    def step(it: int, state: DataFrame):
+        msgs = e.join(state, e["mfrom"] == state["vid"]).select(
+            F.col("mto"),
+            F.when(F.col("is_fwd"), F.col("h")).otherwise(0.0).alias("ca"),
+            F.when(~F.col("is_fwd"), F.col("a")).otherwise(0.0).alias("ch"),
+        )
+        sums = msgs.groupBy("mto").agg(
+            F.sum("ca").alias("a_raw"), F.sum("ch").alias("h_raw")
+        )
+        # join onto the checkpointed state (it carries the identical
+        # vertex universe) — joining the derived `vertices` here would
+        # recompute its distinct-union-of-edges shuffle every round
+        raw = (
+            state.select("vid")
+            .join(sums, F.col("vid") == sums["mto"], "left")
+            .select(
                 "vid",
-                (F.col("a_raw") / F.lit(ta)).alias("a"),
-                (F.col("h_raw") / F.lit(th)).alias("h"),
-            ).localCheckpoint(eager=True)
+                F.coalesce("a_raw", F.lit(0.0)).alias("a_raw"),
+                F.coalesce("h_raw", F.lit(0.0)).alias("h_raw"),
+            )
+            .repartition(num_partitions, "vid")
+            .persist()
+        )
+        tot = raw.agg(F.sum("a_raw"), F.sum("h_raw")).collect()[0]
+        ta, th = float(tot[0] or 0.0), float(tot[1] or 0.0)
+        if ta == 0.0 or th == 0.0:
+            # edgeless (or one-directional degenerate) graph: scores
+            # cannot renormalize — keep the current state rather than
+            # dividing by zero
             raw.unpersist()
-            metrics.log(it, wall_s=round(time.monotonic() - t0, 4), msgs=n_msgs)
+            return state, {"msgs": n_msgs}, True
+        state = raw.select(
+            "vid",
+            (F.col("a_raw") / F.lit(ta)).alias("a"),
+            (F.col("h_raw") / F.lit(th)).alias("h"),
+        ).localCheckpoint(eager=True)
+        raw.unpersist()
+        return state, {"msgs": n_msgs}, False
 
+    state, _, _ = run_rounds(
+        step, state, kernel="hits", num_partitions=num_partitions,
+        max_iter=max_iter, metrics_path=metrics_path,
+    )
     e.unpersist()
     return state.select(
         "vid", F.col("a").alias("authority"), F.col("h").alias("hub")

@@ -30,18 +30,12 @@ vertex-sized and localCheckpointed per round to truncate lineage.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.checkpointing import CheckpointManager
+from citation_graph_spark.checkpointing import resume_point, run_rounds
 from citation_graph_spark.graph.degrees import pin_edges
-from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import iterative_kernel
 
 
 def round_lineage(
@@ -90,10 +84,9 @@ def katz_centrality(
     every ``checkpoint_interval`` rounds (CheckpointManager manifest);
     ``resume=True`` continues from the newest snapshot — bit-identical
     final scores (doubles round-trip parquet exactly; the resumed run
-    replays the identical remaining schedule)."""
+    replays the identical remaining schedule). A snapshot saved under
+    another ``alpha`` or ``beta`` is not resumed: the run starts cold."""
     spark = edges.sparkSession
-    metrics = MetricsLogger(metrics_path, "katz")
-    ckpt = CheckpointManager(checkpoint_dir, "katz") if checkpoint_dir else None
 
     if vertices is None:
         vertices = (
@@ -108,12 +101,12 @@ def katz_centrality(
 
     e, n_edges, num_partitions = pin_edges(edges.select("src", "dst").distinct())
 
-    state, start_iter = (
-        ckpt.restore(spark, "vid", num_partitions) if ckpt and resume else (None, 0)
+    # a snapshot taken under another alpha or beta is a different
+    # series: restore refuses it (logged) and the run starts cold
+    params = {"alpha": alpha, "beta": beta}
+    ckpt, state, start_iter = resume_point(
+        spark, checkpoint_dir, "katz", resume, "vid", num_partitions, params
     )
-    if state is not None and start_iter >= max_iter:
-        e.unpersist()
-        return state.select("vid", F.col("x").alias("score"))
     if state is None:
         state = (
             vertices.select("vid", F.lit(float(beta)).alias("x"))
@@ -121,22 +114,18 @@ def katz_centrality(
             .localCheckpoint(eager=True)
         )
 
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(start_iter + 1, max_iter + 1):
-            t0 = time.monotonic()
-            state = (
-                round_lineage(e, state, alpha, beta)
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
-            )
-            metrics.log(
-                it, wall_s=round(time.monotonic() - t0, 4), msgs=n_edges
-            )
-            if ckpt and (it % checkpoint_interval == 0 or it == max_iter):
-                ckpt.save(
-                    state, it,
-                    meta={"alpha": alpha, "beta": beta, "max_iter": max_iter},
-                )
+    def step(it: int, state: DataFrame):
+        state = (
+            round_lineage(e, state, alpha, beta)
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
+        return state, {"msgs": n_edges}, False
 
+    state, _, _ = run_rounds(
+        step, state, kernel="katz", num_partitions=num_partitions,
+        start=start_iter, max_iter=max_iter, metrics_path=metrics_path,
+        ckpt=ckpt, interval=checkpoint_interval, params=params,
+    )
     e.unpersist()
     return state.select("vid", F.col("x").alias("score"))

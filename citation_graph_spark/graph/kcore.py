@@ -25,17 +25,12 @@ termination decision.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from citation_graph_spark.checkpointing import run_rounds
 from citation_graph_spark.graph.degrees import pin_edges, undirect
-from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import iterative_kernel
 
 
 @iterative_kernel
@@ -50,9 +45,6 @@ def k_core(
     remove-all-below-k rounds. ``max_iter`` caps the rounds; with a cap
     the result is the (still well-defined) state after exactly that
     many synchronous peels, which the SQL oracle mirrors."""
-    spark = edges.sparkSession
-    metrics = MetricsLogger(metrics_path, "k_core")
-
     e, _, num_partitions = pin_edges(undirect(edges).select("src", "dst"))
 
     alive = (
@@ -63,33 +55,27 @@ def k_core(
     )
     n_alive = alive.count()
 
-    # in-loop shuffles run at the kernel's data-proportional width
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(1, max_iter + 1):
-            t0 = time.monotonic()
-            # edges whose BOTH endpoints survive, then surviving degree
-            e_alive = e.join(
-                alive.select(F.col("vid").alias("src")), "src", "left_semi"
-            ).join(alive.select(F.col("vid").alias("dst")), "dst", "left_semi")
-            survivors = (
-                e_alive.groupBy("src")
-                .agg(F.count(F.lit(1)).alias("deg"))
-                .filter(F.col("deg") >= k)
-                .select(F.col("src").alias("vid"))
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
-            )
-            n_new = survivors.count()
-            metrics.log(
-                it,
-                alive=n_new,
-                dropped=n_alive - n_new,
-                wall_s=round(time.monotonic() - t0, 4),
-            )
-            converged = n_new == n_alive
-            alive, n_alive = survivors, n_new
-            if converged or n_alive == 0:
-                break
+    def step(it: int, st: tuple[DataFrame, int]):
+        alive, n_alive = st
+        # edges whose BOTH endpoints survive, then surviving degree
+        e_alive = e.join(
+            alive.select(F.col("vid").alias("src")), "src", "left_semi"
+        ).join(alive.select(F.col("vid").alias("dst")), "dst", "left_semi")
+        survivors = (
+            e_alive.groupBy("src")
+            .agg(F.count(F.lit(1)).alias("deg"))
+            .filter(F.col("deg") >= k)
+            .select(F.col("src").alias("vid"))
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
+        n_new = survivors.count()
+        fields = {"alive": n_new, "dropped": n_alive - n_new}
+        return (survivors, n_new), fields, n_new in (n_alive, 0)
 
+    (alive, _), _, _ = run_rounds(
+        step, (alive, n_alive), kernel="k_core", num_partitions=num_partitions,
+        max_iter=max_iter, metrics_path=metrics_path,
+    )
     e.unpersist()
     return alive

@@ -32,18 +32,13 @@ round is the surviving-edge count — the termination decision.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from citation_graph_spark.checkpointing import run_rounds
 from citation_graph_spark.graph.degrees import auto_partitions
 from citation_graph_spark.graph.triangles import oriented_edges
-from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import iterative_kernel
 
 
 def _support_from_oriented(o: DataFrame) -> DataFrame:
@@ -106,7 +101,6 @@ def k_truss(
     if k < 3:
         raise ValueError(f"k-truss needs k >= 3, got {k}")
     spark = edges.sparkSession
-    metrics = MetricsLogger(metrics_path, "k_truss")
 
     canon = (
         edges.select(
@@ -123,30 +117,29 @@ def k_truss(
     canon.unpersist()
     n_alive = alive.count()
 
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(1, max_iter + 1):
-            t0 = time.monotonic()
-            survivors = (
-                _edge_support(alive, num_partitions)
-                .filter(F.col("support") >= k - 2)
-                .repartition(num_partitions, "a")
-                .localCheckpoint(eager=True)
-            )
-            n_new = survivors.count()
-            metrics.log(
-                it,
-                edges=n_new,
-                dropped=n_alive - n_new,
-                wall_s=round(time.monotonic() - t0, 4),
-            )
-            converged = n_new == n_alive
-            alive, n_alive = survivors.select("a", "b"), n_new
-            if converged or n_alive == 0:
-                # converged: this round's support is the fixpoint
-                # support — reuse it instead of one more enumeration
-                return survivors.select("a", "b", "support")
+    def step(it: int, st: tuple[DataFrame, int]):
+        alive, n_alive = st
+        survivors = (
+            _edge_support(alive, num_partitions)
+            .filter(F.col("support") >= k - 2)
+            .repartition(num_partitions, "a")
+            .localCheckpoint(eager=True)
+        )
+        n_new = survivors.count()
+        fields = {"edges": n_new, "dropped": n_alive - n_new}
+        return (survivors, n_new), fields, n_new in (n_alive, 0)
 
+    (alive, _), _, converged = run_rounds(
+        step, (alive, n_alive), kernel="k_truss",
+        num_partitions=num_partitions, max_iter=max_iter,
+        metrics_path=metrics_path,
+    )
+    if converged:
+        # this round's support is the fixpoint support — reuse it
+        # instead of one more enumeration
+        return alive.select("a", "b", "support")
     # round cap hit: report the capped state with its support
+    alive = alive.select("a", "b")
     return (
         alive.join(
             _edge_support(alive, num_partitions), ["a", "b"], "left"

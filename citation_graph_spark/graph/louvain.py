@@ -37,19 +37,13 @@ iterative kernel here.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from citation_graph_spark.checkpointing import CheckpointManager
+from citation_graph_spark.checkpointing import resume_point, run_rounds
 from citation_graph_spark.graph.degrees import auto_partitions, undirect
-from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import iterative_kernel
 
 
 def louvain_round_lineage(
@@ -163,37 +157,25 @@ def louvain_local_moves(
     )
     deg.count()
 
-    metrics = MetricsLogger(metrics_path, "louvain")
-    ckpt = (
-        CheckpointManager(checkpoint_dir, "louvain")
-        if checkpoint_dir
-        else None
+    ckpt, comm, start_round = resume_point(
+        spark, checkpoint_dir, "louvain", resume, "vid", num_partitions
     )
-    comm, start_round = (
-        ckpt.restore(spark, "vid", num_partitions) if ckpt and resume else (None, 0)
-    )
-    if comm is not None and start_round >= rounds:
-        e.unpersist()
-        sym.unpersist()
-        deg.unpersist()
-        return comm
     if comm is None:
         comm = deg.select("vid", F.col("vid").alias("community"))
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(start_round + 1, rounds + 1):
-            t0 = time.monotonic()
-            comm = (
-                louvain_round_lineage(sym, deg, comm, m)
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
-            )
-            metrics.log(
-                it, wall_s=round(time.monotonic() - t0, 4), msgs=2 * m
-            )
-            if ckpt and (
-                it % checkpoint_interval == 0 or it == rounds
-            ):
-                ckpt.save(comm, it, meta={"rounds": rounds, "m": m})
+
+    def step(it: int, comm: DataFrame):
+        comm = (
+            louvain_round_lineage(sym, deg, comm, m)
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
+        return comm, {"msgs": 2 * m}, False
+
+    comm, _, _ = run_rounds(
+        step, comm, kernel="louvain", num_partitions=num_partitions,
+        start=start_round, max_iter=rounds, metrics_path=metrics_path,
+        ckpt=ckpt, interval=checkpoint_interval,
+    )
     e.unpersist()
     sym.unpersist()
     deg.unpersist()
@@ -255,21 +237,21 @@ def louvain_local_moves_weighted(
     )
     total_vol = deg.agg(F.sum("d")).first()[0] or 0
     assert total_vol % 2 == 0, "self_weights must use the 2x convention"
-    metrics = MetricsLogger(metrics_path, "louvain_weighted")
-    comm = deg.select("vid", F.col("vid").alias("community"))
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(1, rounds + 1):
-            t0 = time.monotonic()
-            comm = (
-                louvain_round_lineage(sym, deg, comm, total_vol // 2)
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
-            )
-            metrics.log(
-                it,
-                wall_s=round(time.monotonic() - t0, 4),
-                msgs=total_vol,
-            )
+    m = total_vol // 2
+
+    def step(it: int, comm: DataFrame):
+        comm = (
+            louvain_round_lineage(sym, deg, comm, m)
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
+        return comm, {"msgs": total_vol}, False
+
+    comm, _, _ = run_rounds(
+        step, deg.select("vid", F.col("vid").alias("community")),
+        kernel="louvain_weighted", num_partitions=num_partitions,
+        max_iter=rounds, metrics_path=metrics_path,
+    )
     e.unpersist()
     sym.unpersist()
     deg.unpersist()

@@ -42,18 +42,12 @@ localCheckpoint; the driver sees only scalar counts.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from citation_graph_spark.checkpointing import CheckpointManager
+from citation_graph_spark.checkpointing import resume_point, run_rounds
 from citation_graph_spark.graph.degrees import auto_partitions, undirect
-from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import iterative_kernel
 
 _P = 2147483647
 _EID_S = 2147483648  # 2^31: eid = a * 2^31 + b, injective for vid < 2^31
@@ -161,12 +155,6 @@ def maximal_matching(
     if local_finish_rows is None:
         local_finish_rows = _LOCAL_FINISH_ROWS
     spark = edges.sparkSession
-    metrics = MetricsLogger(metrics_path, "matching")
-    ckpt = (
-        CheckpointManager(checkpoint_dir, "matching")
-        if checkpoint_dir
-        else None
-    )
 
     und0 = undirect(edges).select("src", "dst").persist()
     n_sym = und0.count()
@@ -188,8 +176,8 @@ def maximal_matching(
     )
     und0.unpersist()
 
-    matched, start_iter = (
-        ckpt.restore(spark, "a", num_partitions) if ckpt and resume else (None, 0)
+    ckpt, matched, start_iter = resume_point(
+        spark, checkpoint_dir, "matching", resume, "a", num_partitions
     )
     if matched is None:
         matched = spark.createDataFrame(
@@ -209,63 +197,53 @@ def maximal_matching(
     )
     n_active = act.count()
 
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(start_iter + 1, max_iter + 1):
-            if n_active == 0:
-                break
-            t0 = time.monotonic()
-            if local_finish_rows and n_active <= local_finish_rows:
-                act_rows = [
-                    (r["a"], r["b"], r["m"]) for r in act.collect()
-                ]
-                new = _finish_local_matching(act_rows, it, max_iter)
-                if new:
-                    matched = matched.unionByName(
-                        spark.createDataFrame(
-                            new, "a long, b long, match_round long"
-                        )
-                    ).localCheckpoint(eager=True)
-                metrics.log(
-                    it,
-                    winners=len(new),
-                    active=0,
-                    endgame=1,
-                    wall_s=round(time.monotonic() - t0, 4),
-                )
-                n_active = 0
-                break
-            winners = matching_round_lineage(act, it).localCheckpoint(
-                eager=True
-            )
-            n_win = winners.count()
-            won = winners.withColumn("match_round", F.lit(it).cast("long"))
-            matched = matched.unionByName(won)
-            matched = matched.localCheckpoint(eager=True)
-            mv = (
-                winners.select(F.col("a").alias("vid"))
-                .unionByName(winners.select(F.col("b").alias("vid")))
-                .distinct()
-            )
-            act = (
-                act.join(mv.withColumnRenamed("vid", "a"), "a", "left_anti")
-                .join(mv.withColumnRenamed("vid", "b"), "b", "left_anti")
-                .select("a", "b", "m")
-                .repartition(num_partitions, "a")
-                .localCheckpoint(eager=True)
-            )
-            n_next = act.count()
-            metrics.log(
-                it,
-                winners=n_win,
-                active=n_next,
-                removed=n_active - n_next,
-                wall_s=round(time.monotonic() - t0, 4),
-            )
-            n_active = n_next
-            if ckpt and (
-                it % checkpoint_interval == 0 or n_active == 0
-            ):
-                ckpt.save(matched, it, {"n_active": n_active})
+    def step(it: int, st: tuple[DataFrame, DataFrame, int]):
+        matched, act, n_active = st
+        if local_finish_rows and n_active <= local_finish_rows:
+            # the endgame replays every remaining round at once
+            act_rows = [(r["a"], r["b"], r["m"]) for r in act.collect()]
+            new = _finish_local_matching(act_rows, it, max_iter)
+            if new:
+                matched = matched.unionByName(
+                    spark.createDataFrame(
+                        new, "a long, b long, match_round long"
+                    )
+                ).localCheckpoint(eager=True)
+            fields = {"winners": len(new), "active": 0, "endgame": 1}
+            return (matched, act, 0), fields, True
+        winners = matching_round_lineage(act, it).localCheckpoint(eager=True)
+        n_win = winners.count()
+        won = winners.withColumn("match_round", F.lit(it).cast("long"))
+        matched = matched.unionByName(won).localCheckpoint(eager=True)
+        mv = (
+            winners.select(F.col("a").alias("vid"))
+            .unionByName(winners.select(F.col("b").alias("vid")))
+            .distinct()
+        )
+        act = (
+            act.join(mv.withColumnRenamed("vid", "a"), "a", "left_anti")
+            .join(mv.withColumnRenamed("vid", "b"), "b", "left_anti")
+            .select("a", "b", "m")
+            .repartition(num_partitions, "a")
+            .localCheckpoint(eager=True)
+        )
+        n_next = act.count()
+        fields = {
+            "winners": n_win,
+            "active": n_next,
+            "removed": n_active - n_next,
+        }
+        return (matched, act, n_next), fields, n_next == 0
+
+    # the snapshot of round ``it`` holds the pairs matched up to it: an
+    # endgame round also holds the later rounds it replayed
+    if n_active:
+        (matched, _, _), _, _ = run_rounds(
+            step, (matched, act, n_active), kernel="matching",
+            num_partitions=num_partitions, start=start_iter, max_iter=max_iter,
+            metrics_path=metrics_path, ckpt=ckpt, interval=checkpoint_interval,
+            snapshot=lambda st, it: st[0].filter(F.col("match_round") <= it),
+        )
 
     mates = matched.select(
         F.col("a").alias("vid"), F.col("b").alias("mate"), "match_round"

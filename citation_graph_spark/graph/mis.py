@@ -30,17 +30,12 @@ scalar counts.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from citation_graph_spark.checkpointing import run_rounds
 from citation_graph_spark.graph.degrees import pin_edges, undirect
-from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import iterative_kernel
 
 _P = 2147483647
 _M = 8388608  # 2^23
@@ -83,9 +78,6 @@ def maximal_independent_set(
     maximality hold at the fixpoint; with a ``max_iter`` cap the
     result is the state after exactly that many synchronous rounds
     (which the SQL oracle mirrors)."""
-    spark = edges.sparkSession
-    metrics = MetricsLogger(metrics_path, "mis")
-
     e, _, num_partitions = pin_edges(undirect(edges).select("src", "dst"))
 
     verts = (
@@ -94,47 +86,45 @@ def maximal_independent_set(
         .repartition(num_partitions, "vid")
         .localCheckpoint(eager=True)
     )
-    active = verts
-    n_active = active.count()
-    mis = None
 
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(1, max_iter + 1):
-            t0 = time.monotonic()
-            e_act = e.join(
-                active.select(F.col("vid").alias("src")), "src", "left_semi"
-            ).join(active.select(F.col("vid").alias("dst")), "dst", "left_semi")
-            winners = mis_round_lineage(e, active, it).localCheckpoint(
-                eager=True
+    def step(it: int, st: tuple[DataFrame | None, DataFrame, int]):
+        mis, active, n_active = st
+        e_act = e.join(
+            active.select(F.col("vid").alias("src")), "src", "left_semi"
+        ).join(active.select(F.col("vid").alias("dst")), "dst", "left_semi")
+        winners = mis_round_lineage(e, active, it).localCheckpoint(
+            eager=True
+        )
+        n_win = winners.count()
+        won = winners.withColumn("mis_round", F.lit(it).cast("long"))
+        mis = won if mis is None else mis.unionByName(won)
+        mis = mis.localCheckpoint(eager=True)
+        removed_nb = (
+            e_act.join(
+                winners.select(F.col("vid").alias("src")), "src", "left_semi"
             )
-            n_win = winners.count()
-            won = winners.withColumn("mis_round", F.lit(it).cast("long"))
-            mis = won if mis is None else mis.unionByName(won)
-            mis = mis.localCheckpoint(eager=True)
-            removed_nb = (
-                e_act.join(
-                    winners.select(F.col("vid").alias("src")), "src", "left_semi"
-                )
-                .select(F.col("dst").alias("vid"))
-                .distinct()
-            )
-            active = (
-                active.join(winners, "vid", "left_anti")
-                .join(removed_nb, "vid", "left_anti")
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
-            )
-            n_next = active.count()
-            metrics.log(
-                it,
-                winners=n_win,
-                active=n_next,
-                removed=n_active - n_next,
-                wall_s=round(time.monotonic() - t0, 4),
-            )
-            n_active = n_next
-            if n_active == 0:
-                break
+            .select(F.col("dst").alias("vid"))
+            .distinct()
+        )
+        active = (
+            active.join(winners, "vid", "left_anti")
+            .join(removed_nb, "vid", "left_anti")
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
+        n_next = active.count()
+        fields = {
+            "winners": n_win,
+            "active": n_next,
+            "removed": n_active - n_next,
+        }
+        return (mis, active, n_next), fields, n_next == 0
+
+    (mis, _, _), _, _ = run_rounds(
+        step, (None, verts, verts.count()), kernel="mis",
+        num_partitions=num_partitions, max_iter=max_iter,
+        metrics_path=metrics_path,
+    )
 
     e.unpersist()
     return verts.join(mis, "vid", "left").select(

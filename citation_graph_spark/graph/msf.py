@@ -30,11 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from citation_graph_spark.checkpointing import run_rounds
 from citation_graph_spark.graph.degrees import auto_partitions
-from citation_graph_spark.session import (
-    iterative_kernel,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import iterative_kernel
 
 
 @iterative_kernel
@@ -83,39 +81,43 @@ def boruvka_msf(
         return _local_kruskal_tail(e, labels)
 
     forest_parts: list[DataFrame] = []
-    with shuffle_partitions_conf(spark, auto_partitions(spark, n_edges)):
-        for _ in range(max_rounds):
-            sel = nomination_lineage(e, labels).localCheckpoint(eager=True)
-            n_live = sel.count()
-            if n_live == 0:  # no cross-component edge left anywhere
-                break
-            if n_live <= local_finish_comps:
-                # Kruskal endgame (filtering, Lattanzi et al. SPAA'11):
-                # ≤1024 live components bound the min-edge-per-pair
-                # quotient to ≤524k rows — reduce distributedly, collect,
-                # and finish the remaining forest in one driver Kruskal
-                # under the same (w, src, dst) total order.  The quotient
-                # MSF equals the MSF of the remaining contracted graph
-                # (cycle property kills non-minimal parallel edges), so
-                # the result is bit-identical to running the loop out.
-                forest_parts.append(_local_kruskal_tail(e, labels))
-                break
-            forest_parts.append(sel.select("src", "dst", "w").distinct())
 
-            # contract: components joined by nominated edges merge.  The
-            # nomination map is functional with only 2-cycles (see
-            # rooted_nominations), so pointer doubling resolves the merge
-            # in O(log depth) one-join rounds — no general CC kernel needed.
-            merged = contract_nominations(sel, max_rounds=max_rounds)
-            labels = (
-                labels.join(merged, "comp", "left")
-                .select("vid", F.coalesce("newc", "comp").alias("comp"))
-                .localCheckpoint(eager=True)
-            )
-        else:
-            raise RuntimeError(
-                f"boruvka_msf did not converge in {max_rounds} rounds"
-            )
+    def step(it: int, labels: DataFrame):
+        sel = nomination_lineage(e, labels).localCheckpoint(eager=True)
+        n_live = sel.count()
+        if n_live == 0:  # no cross-component edge left anywhere
+            return labels, {"live": 0}, True
+        if n_live <= local_finish_comps:
+            # Kruskal endgame (filtering, Lattanzi et al. SPAA'11):
+            # ≤1024 live components bound the min-edge-per-pair
+            # quotient to ≤524k rows — reduce distributedly, collect,
+            # and finish the remaining forest in one driver Kruskal
+            # under the same (w, src, dst) total order.  The quotient
+            # MSF equals the MSF of the remaining contracted graph
+            # (cycle property kills non-minimal parallel edges), so
+            # the result is bit-identical to running the loop out.
+            forest_parts.append(_local_kruskal_tail(e, labels))
+            return labels, {"live": n_live}, True
+        forest_parts.append(sel.select("src", "dst", "w").distinct())
+
+        # contract: components joined by nominated edges merge.  The
+        # nomination map is functional with only 2-cycles (see
+        # rooted_nominations), so pointer doubling resolves the merge
+        # in O(log depth) one-join rounds — no general CC kernel needed.
+        merged = contract_nominations(sel, max_rounds=max_rounds)
+        labels = (
+            labels.join(merged, "comp", "left")
+            .select("vid", F.coalesce("newc", "comp").alias("comp"))
+            .localCheckpoint(eager=True)
+        )
+        return labels, {"live": n_live}, False
+
+    _, _, converged = run_rounds(
+        step, labels, kernel="boruvka_msf",
+        num_partitions=auto_partitions(spark, n_edges), max_iter=max_rounds,
+    )
+    if not converged:
+        raise RuntimeError(f"boruvka_msf did not converge in {max_rounds} rounds")
 
     if not forest_parts:
         return spark.createDataFrame([], e.schema)

@@ -33,14 +33,11 @@ redistribute their rank mass uniformly.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.checkpointing import CheckpointManager
+from citation_graph_spark.checkpointing import resume_point, run_rounds
 from citation_graph_spark.graph.degrees import auto_partitions
-from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import iterative_kernel, shuffle_partitions_conf
 
 
@@ -79,9 +76,6 @@ def pagerank(
     warm start is the Spark-native O(drift) version of that refresh).
     """
     spark = edges.sparkSession
-
-    metrics = MetricsLogger(metrics_path, "pagerank")
-    ckpt = CheckpointManager(checkpoint_dir, "pagerank") if checkpoint_dir else None
 
     # ONE pass over the (possibly expensively derived) input edge table:
     # cache it raw, count it for partition sizing, then build the
@@ -127,11 +121,18 @@ def pagerank(
             df.unpersist()
         return spark.createDataFrame([], "vid long, score double")
 
-    ranks, start_iter = (
-        ckpt.restore(spark, "vid", num_partitions) if ckpt and resume else (None, 0)
+    ckpt, ranks, start_iter = resume_point(
+        spark, checkpoint_dir, "pagerank", resume, "vid", num_partitions
     )
-    if ranks is not None and ckpt.latest()["meta"].get("converged"):
-        # already at fixpoint — identical results, no extra rounds
+    saved = ckpt.latest()["meta"] if ranks is not None else {}
+    if (
+        saved.get("converged")
+        and saved.get("alpha") == alpha
+        and saved.get("tol", float("inf")) <= tol
+    ):
+        # already at this call's fixpoint — identical results, no extra
+        # rounds. Any other snapshot (another alpha, a looser tol) is
+        # only a start vector: the rounds below continue from it.
         for df in (edges_n, out_deg, edges_p):
             df.unpersist()
         return ranks.select("vid", F.col("rank").alias("score"))
@@ -178,7 +179,6 @@ def pagerank(
     edges_p.unpersist()
 
     teleport = (1.0 - alpha) / n
-    total_wall = 0.0
     # dangling mass for the first round; later rounds get it for free
     # from the same single-pass stats aggregation that computes Σ|Δ|
     d_mass = (
@@ -220,53 +220,34 @@ def pagerank(
             cur["is_dangling"],
         )
 
-    it, l1 = start_iter, float("inf")
-    # in-loop shuffles (the groupBy("dst") and rank join) must run at
-    # the kernel's own data-proportional width, not the session default
-    # — same alignment rationale as the CC/Borůvka loops
-    with shuffle_partitions_conf(spark, num_partitions):
-        while it < max_iter:
-            t0 = time.monotonic()
-            # rounds are not fused: an A/B measured unroll 4 slower than 1
-            # (8.6 s vs 7.3 s) as unmaterialized state re-plans exchanges.
-            # Lazy checkpoint: when stats run, their collect materializes
-            # it as a side effect — ONE Spark job per round, not two
-            new_ranks = one_round(ranks).localCheckpoint(eager=not need_stats)
+    def step(it: int, cur: DataFrame):
+        nonlocal d_mass
+        # rounds are not fused: an A/B measured unroll 4 slower than 1
+        # (8.6 s vs 7.3 s) as unmaterialized state re-plans exchanges.
+        # Lazy checkpoint when the stats collect below materializes it.
+        new_ranks = one_round(cur).localCheckpoint(eager=not need_stats)
+        l1 = float("inf")
+        if need_stats:
+            stats = new_ranks.agg(
+                F.sum(F.abs(F.col("rank") - F.col("_prev"))).alias("l1"),
+                F.coalesce(
+                    F.sum(F.when(F.col("is_dangling"), F.col("rank"))),
+                    F.lit(0.0),
+                ).alias("d_mass"),
+            ).collect()[0]
+            l1, d_mass = stats["l1"], stats["d_mass"]
+        fields = {
+            "l1_delta": l1 if l1 != float("inf") else None,
+            "edges": edge_count,
+            "vertices": n,
+        }
+        return new_ranks.drop("_prev"), fields, l1 < tol
 
-            if need_stats:
-                stats = new_ranks.agg(
-                    F.sum(F.abs(F.col("rank") - F.col("_prev"))).alias("l1"),
-                    F.coalesce(
-                        F.sum(F.when(F.col("is_dangling"), F.col("rank"))),
-                        F.lit(0.0),
-                    ).alias("d_mass"),
-                ).collect()[0]
-                l1, d_mass = stats["l1"], stats["d_mass"]
-            ranks = new_ranks.drop("_prev")
-            it += 1
-
-            wall = time.monotonic() - t0
-            total_wall += wall
-            metrics.log(
-                it,
-                l1_delta=l1 if l1 != float("inf") else None,
-                wall_s=round(wall, 4),
-                edges=edge_count,
-                vertices=n,
-                edges_per_sec=round(edge_count / wall, 1) if wall > 0 else None,
-            )
-            if ckpt and (it % checkpoint_interval == 0):
-                ckpt.save(ranks, it, {"l1": l1, "alpha": alpha, "tol": tol})
-            if l1 < tol:
-                break
-
-    if ckpt:
-        ckpt.save(ranks, it, {"l1": l1, "converged": l1 < tol})
-    metrics.log(
-        -1,
-        total_wall_s=round(total_wall, 4),
-        iterations=it - start_iter,
-        iters_per_sec=round((it - start_iter) / total_wall, 3) if total_wall else None,
+    ranks, _, _ = run_rounds(
+        step, ranks, kernel="pagerank", num_partitions=num_partitions,
+        start=start_iter, max_iter=max_iter, metrics_path=metrics_path,
+        ckpt=ckpt, interval=checkpoint_interval,
+        params={"alpha": alpha, "tol": tol}, throughput="edges",
     )
     edges_n.unpersist()
     return ranks.select("vid", F.col("rank").alias("score"))

@@ -45,17 +45,12 @@ tests additionally check both against an independent Tarjan oracle.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from citation_graph_spark.checkpointing import run_rounds
 from citation_graph_spark.graph.degrees import auto_partitions
-from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import iterative_kernel
 
 _LOCAL_FINISH_EDGE_ROWS = 50_000
 
@@ -111,7 +106,6 @@ def strongly_connected_components(
     """Returns ``(vid: long, scc: long)``; scc = max vid in the
     strongly connected component (isolated vertices are their own)."""
     spark = edges.sparkSession
-    metrics = MetricsLogger(metrics_path, "scc")
 
     if vertices is None:
         vertices = (
@@ -129,122 +123,119 @@ def strongly_connected_components(
     if n_edges <= local_finish_rows:
         return _finish_local(e, vertices)
 
-    with shuffle_partitions_conf(spark, num_partitions):
-        done = None  # accumulated (vid, scc) for removed vertices
-        live = vertices.localCheckpoint(eager=True)
-        for outer in range(1, max_outer + 1):
-            n_live_e = e.count()
-            if n_live_e == 0:
-                break
-            if n_live_e <= local_finish_rows:
-                # filtering endgame: identical algorithm, numpy
-                local = _finish_local(e, live)
-                done = local if done is None else done.unionByName(local)
-                live = None
-                break
-            t0 = time.monotonic()
+    def step(outer: int, st: tuple):
+        e, live, done = st
+        n_live_e = e.count()
+        if n_live_e == 0:
+            return st, {}, True
+        if n_live_e <= local_finish_rows:
+            # filtering endgame: identical algorithm, numpy
+            local = _finish_local(e, live)
+            done = local if done is None else done.unionByName(local)
+            return (e, None, done), {}, True
 
-            # ---- 1) forward max-color propagation to fixpoint
-            colors = live.select(
-                "vid", F.col("vid").alias("color")
-            ).repartition(num_partitions, "vid").localCheckpoint(eager=True)
-            for _ in range(max_inner):
-                upd = (
-                    e.join(colors, e["src"] == colors["vid"])
-                    .select(F.col("dst"), F.col("color").alias("cin"))
-                    .groupBy("dst")
-                    .agg(F.max("cin").alias("cin"))
-                )
-                new = (
-                    colors.join(upd, colors["vid"] == upd["dst"], "left")
-                    .select(
-                        "vid",
-                        F.greatest(
-                            "color", F.coalesce("cin", F.lit(-1))
-                        ).alias("ncolor"),
-                    )
-                    .repartition(num_partitions, "vid")
-                    .localCheckpoint(eager=True)
-                )
-                changed = (
-                    new.join(colors, "vid")
-                    .filter(F.col("ncolor") != F.col("color"))
-                    .count()
-                )
-                colors = new.select("vid", F.col("ncolor").alias("color"))
-                if changed == 0:
-                    break
-            else:
-                raise RuntimeError("scc: color propagation did not converge")
-
-            # ---- 2) backward flag propagation in the same-color graph
-            csrc = colors.select(
-                F.col("vid").alias("src"), F.col("color").alias("c_src")
+        # ---- 1) forward max-color propagation to fixpoint
+        colors = live.select(
+            "vid", F.col("vid").alias("color")
+        ).repartition(num_partitions, "vid").localCheckpoint(eager=True)
+        for _ in range(max_inner):
+            upd = (
+                e.join(colors, e["src"] == colors["vid"])
+                .select(F.col("dst"), F.col("color").alias("cin"))
+                .groupBy("dst")
+                .agg(F.max("cin").alias("cin"))
             )
-            cdst = colors.select(
-                F.col("vid").alias("dst"), F.col("color").alias("c_dst")
-            )
-            same = (
-                e.join(csrc, "src")
-                .join(cdst, "dst")
-                .filter(F.col("c_src") == F.col("c_dst"))
-                .select("src", "dst")
-                .repartition(num_partitions, "dst")
+            new = (
+                colors.join(upd, colors["vid"] == upd["dst"], "left")
+                .select(
+                    "vid",
+                    F.greatest(
+                        "color", F.coalesce("cin", F.lit(-1))
+                    ).alias("ncolor"),
+                )
+                .repartition(num_partitions, "vid")
                 .localCheckpoint(eager=True)
             )
-            flagged = (
-                colors.filter(F.col("vid") == F.col("color"))
-                .select("vid")
+            changed = (
+                new.join(colors, "vid")
+                .filter(F.col("ncolor") != F.col("color"))
+                .count()
+            )
+            colors = new.select("vid", F.col("ncolor").alias("color"))
+            if changed == 0:
+                break
+        else:
+            raise RuntimeError("scc: color propagation did not converge")
+
+        # ---- 2) backward flag propagation in the same-color graph
+        csrc = colors.select(
+            F.col("vid").alias("src"), F.col("color").alias("c_src")
+        )
+        cdst = colors.select(
+            F.col("vid").alias("dst"), F.col("color").alias("c_dst")
+        )
+        same = (
+            e.join(csrc, "src")
+            .join(cdst, "dst")
+            .filter(F.col("c_src") == F.col("c_dst"))
+            .select("src", "dst")
+            .repartition(num_partitions, "dst")
+            .localCheckpoint(eager=True)
+        )
+        flagged = (
+            colors.filter(F.col("vid") == F.col("color"))
+            .select("vid")
+            .localCheckpoint(eager=True)
+        )
+        for _ in range(max_inner):
+            grown = (
+                same.join(flagged, same["dst"] == flagged["vid"])
+                .select(F.col("src").alias("vid"))
+                .distinct()
+                .join(flagged, "vid", "left_anti")
                 .localCheckpoint(eager=True)
             )
-            for _ in range(max_inner):
-                grown = (
-                    same.join(flagged, same["dst"] == flagged["vid"])
-                    .select(F.col("src").alias("vid"))
-                    .distinct()
-                    .join(flagged, "vid", "left_anti")
-                    .localCheckpoint(eager=True)
-                )
-                if grown.count() == 0:
-                    break
-                flagged = flagged.unionByName(grown).localCheckpoint(
-                    eager=True
-                )
-            else:
-                raise RuntimeError("scc: backward flags did not converge")
-
-            # ---- 3) emit + remove
-            part = colors.join(flagged, "vid").select(
-                "vid", F.col("color").alias("scc")
-            )
-            done = part if done is None else done.unionByName(part)
-            done = done.localCheckpoint(eager=True)
-            live = live.join(flagged, "vid", "left_anti").localCheckpoint(
+            if grown.count() == 0:
+                break
+            flagged = flagged.unionByName(grown).localCheckpoint(
                 eager=True
             )
-            e = (
-                e.join(
-                    flagged.select(F.col("vid").alias("src")), "src", "left_anti"
-                )
-                .join(
-                    flagged.select(F.col("vid").alias("dst")), "dst", "left_anti"
-                )
-                .localCheckpoint(eager=True)
-            )
-            metrics.log(
-                outer,
-                wall_s=round(time.monotonic() - t0, 4),
-                removed=part.count(),
-            )
         else:
-            raise RuntimeError("scc: outer loop exceeded max_outer")
+            raise RuntimeError("scc: backward flags did not converge")
 
-        if live is not None and done is not None:
-            # any still-live vertices are edge-free singletons
-            rest = live.select("vid", F.col("vid").alias("scc"))
-            done = done.unionByName(rest)
-        elif done is None:
-            done = vertices.select("vid", F.col("vid").alias("scc"))
+        # ---- 3) emit + remove
+        part = colors.join(flagged, "vid").select(
+            "vid", F.col("color").alias("scc")
+        )
+        done = part if done is None else done.unionByName(part)
+        done = done.localCheckpoint(eager=True)
+        live = live.join(flagged, "vid", "left_anti").localCheckpoint(
+            eager=True
+        )
+        e = (
+            e.join(
+                flagged.select(F.col("vid").alias("src")), "src", "left_anti"
+            )
+            .join(
+                flagged.select(F.col("vid").alias("dst")), "dst", "left_anti"
+            )
+            .localCheckpoint(eager=True)
+        )
+        return (e, live, done), {"removed": part.count()}, False
+
+    (_, live, done), _, finished = run_rounds(
+        step, (e, vertices.localCheckpoint(eager=True), None), kernel="scc",
+        num_partitions=num_partitions, max_iter=max_outer,
+        metrics_path=metrics_path,
+    )
+    if not finished:
+        raise RuntimeError("scc: outer loop exceeded max_outer")
+    if live is not None and done is not None:
+        # any still-live vertices are edge-free singletons
+        rest = live.select("vid", F.col("vid").alias("scc"))
+        done = done.unionByName(rest)
+    elif done is None:
+        done = vertices.select("vid", F.col("vid").alias("scc"))
 
     # vertices never touched by an edge keep their own vid
     return (

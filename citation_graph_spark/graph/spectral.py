@@ -59,18 +59,12 @@ per-round localCheckpoint bounds lineage, CheckpointManager persists
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.checkpointing import CheckpointManager
+from citation_graph_spark.checkpointing import resume_point, run_rounds
 from citation_graph_spark.graph.degrees import auto_partitions, undirect
-from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import iterative_kernel
 
 FIEDLER_SCALE = 10000
 
@@ -123,12 +117,6 @@ def fiedler_scores(
     result is still deterministic and oracle-replayable, just not a
     Fiedler vector of anything."""
     spark = edges.sparkSession
-    metrics = MetricsLogger(metrics_path, "fiedler")
-    ckpt = (
-        CheckpointManager(checkpoint_dir, "fiedler")
-        if checkpoint_dir
-        else None
-    )
     sym = undirect(edges.select("src", "dst"))
     deg = sym.groupBy(F.col("src").alias("vid")).agg(
         F.count(F.lit(1)).alias("deg")
@@ -154,8 +142,8 @@ def fiedler_scores(
     )
     syms.count()
 
-    x, start_iter = (
-        ckpt.restore(spark, "vid", num_partitions) if ckpt and resume else (None, 0)
+    ckpt, x, start_iter = resume_point(
+        spark, checkpoint_dir, "fiedler", resume, "vid", num_partitions
     )
     if x is None:
         # deterministic non-constant seed, guaranteed not the
@@ -176,69 +164,65 @@ def fiedler_scores(
             .localCheckpoint(eager=True)
         )
 
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(start_iter + 1, max_iter + 1):
-            t0 = time.monotonic()
-            y = fiedler_round_lineage(syms, x)
-            agg = y.agg(
-                F.sum("y").alias("s"),
-                F.min(F.lit(n) * F.col("y")).alias("zl"),
-                F.max(F.lit(n) * F.col("y")).alias("zh"),
-            ).first()
-            s, zl, zh = int(agg["s"]), int(agg["zl"]), int(agg["zh"])
-            zmin, zmax = zl - s, zh - s
-            # z = n·y − Σy is the exact-integer deflated projection
-            # BEFORE the min-shift rescale; its sign is the classic
-            # Fiedler sign (the rescale's zero sits at the z
-            # MIDRANGE, so thresholding x>0 on a skewed score
-            # distribution is NOT the sign cut — carry z so the
-            # bisector can threshold the true zero crossing)
-            zcol = (F.lit(n) * F.col("y") - F.lit(s)).cast("long")
-            if zmax == zmin:
-                x = (
-                    y.select(
-                        "vid",
-                        F.lit(0).cast("long").alias("x"),
-                        zcol.alias("z"),
-                    )
-                    .repartition(num_partitions, "vid")
-                    .localCheckpoint(eager=True)
+    def step(it: int, x: DataFrame):
+        y = fiedler_round_lineage(syms, x)
+        agg = y.agg(
+            F.sum("y").alias("s"),
+            F.min(F.lit(n) * F.col("y")).alias("zl"),
+            F.max(F.lit(n) * F.col("y")).alias("zh"),
+        ).first()
+        s, zl, zh = int(agg["s"]), int(agg["zl"]), int(agg["zh"])
+        zmin, zmax = zl - s, zh - s
+        # z = n·y − Σy is the exact-integer deflated projection
+        # BEFORE the min-shift rescale; its sign is the classic
+        # Fiedler sign (the rescale's zero sits at the z
+        # MIDRANGE, so thresholding x>0 on a skewed score
+        # distribution is NOT the sign cut — carry z so the
+        # bisector can threshold the true zero crossing)
+        zcol = (F.lit(n) * F.col("y") - F.lit(s)).cast("long")
+        if zmax == zmin:
+            x = (
+                y.select(
+                    "vid",
+                    F.lit(0).cast("long").alias("x"),
+                    zcol.alias("z"),
+                )
+                .repartition(num_partitions, "vid")
+                .localCheckpoint(eager=True)
+            )
+        else:
+            spread = zmax - zmin
+            if spread <= FIEDLER_SAFE_SPREAD:
+                x_expr = (
+                    f"div(({n}L * y - {s}L - {zmin}L)"
+                    f" * {2 * FIEDLER_SCALE}L,"
+                    f" {spread}L)"
                 )
             else:
-                spread = zmax - zmin
-                if spread <= FIEDLER_SAFE_SPREAD:
-                    x_expr = (
-                        f"div(({n}L * y - {s}L - {zmin}L)"
-                        f" * {2 * FIEDLER_SCALE}L,"
-                        f" {spread}L)"
-                    )
-                else:
-                    x_expr = (
-                        f"div(div({n}L * y - {s}L - {zmin}L,"
-                        f" {FIEDLER_SHIFT}L)"
-                        f" * {2 * FIEDLER_SCALE}L,"
-                        f" {max(spread // FIEDLER_SHIFT, 1)}L)"
-                    )
-                x = (
-                    y.select(
-                        "vid",
-                        (F.expr(x_expr) - F.lit(FIEDLER_SCALE))
-                        .cast("long")
-                        .alias("x"),
-                        zcol.alias("z"),
-                    )
-                    .repartition(num_partitions, "vid")
-                    .localCheckpoint(eager=True)
+                x_expr = (
+                    f"div(div({n}L * y - {s}L - {zmin}L,"
+                    f" {FIEDLER_SHIFT}L)"
+                    f" * {2 * FIEDLER_SCALE}L,"
+                    f" {max(spread // FIEDLER_SHIFT, 1)}L)"
                 )
-            metrics.log(
-                it,
-                wall_s=round(time.monotonic() - t0, 4),
-                z_spread=zmax - zmin,
+            x = (
+                y.select(
+                    "vid",
+                    (F.expr(x_expr) - F.lit(FIEDLER_SCALE))
+                    .cast("long")
+                    .alias("x"),
+                    zcol.alias("z"),
+                )
+                .repartition(num_partitions, "vid")
+                .localCheckpoint(eager=True)
             )
-            if ckpt and (
-                it % checkpoint_interval == 0 or it == max_iter
-            ):
-                ckpt.save(x, it, meta={"max_iter": max_iter})
+        return x, {"z_spread": zmax - zmin}, False
+
+    x, _, _ = run_rounds(
+        step, x, kernel="fiedler", num_partitions=num_partitions,
+        start=start_iter, max_iter=max_iter, metrics_path=metrics_path,
+        ckpt=ckpt, interval=checkpoint_interval,
+    )
     syms.unpersist()
     return x.select("vid", F.col("x").alias("score_q4"), "z")
 
@@ -325,73 +309,79 @@ def refine_bisection(
         F.col("gain").cast("long") * F.lit(2**33)
         + (F.lit(2**33) - F.col("vid"))
     )
-    with shuffle_partitions_conf(spark, num_partitions):
-        for _ in range(rounds):
-            # phase A: per-vertex same/other-side neighbor counts
-            nbr = (
-                sym.join(
-                    state.select(
-                        F.col("vid").alias("dst"),
-                        F.col("side").alias("nside"),
+
+    def step(it: int, state: DataFrame):
+        # phase A: per-vertex same/other-side neighbor counts
+        nbr = (
+            sym.join(
+                state.select(
+                    F.col("vid").alias("dst"),
+                    F.col("side").alias("nside"),
+                ),
+                "dst",
+            )
+            .groupBy(F.col("src").alias("vid"))
+            .agg(
+                F.sum(F.col("nside")).alias("s1"),
+                F.sum(1 - F.col("nside")).alias("s0"),
+            )
+        )
+        gains = (
+            state.join(nbr, "vid", "left")
+            .select(
+                "vid",
+                "side",
+                F.when(
+                    F.col("side") == 1,
+                    F.coalesce("s0", F.lit(0))
+                    - F.coalesce("s1", F.lit(0)),
+                )
+                .otherwise(
+                    F.coalesce("s1", F.lit(0))
+                    - F.coalesce("s0", F.lit(0))
+                )
+                .cast("long")
+                .alias("gain"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        # phase B: positive-gain vertices that beat every
+        # positive-gain neighbor flip (independent set)
+        cand_nbr_best = (
+            sym.join(
+                gains.filter(F.col("gain") > 0).select(
+                    F.col("vid").alias("dst"),
+                    p_self.alias("np"),
+                ),
+                "dst",
+            )
+            .groupBy(F.col("src").alias("vid"))
+            .agg(F.max("np").alias("best_nbr_p"))
+        )
+        state = (
+            gains.join(cand_nbr_best, "vid", "left")
+            .select(
+                "vid",
+                F.when(
+                    (F.col("gain") > 0)
+                    & (
+                        F.col("best_nbr_p").isNull()
+                        | (p_self > F.col("best_nbr_p"))
                     ),
-                    "dst",
+                    1 - F.col("side"),
                 )
-                .groupBy(F.col("src").alias("vid"))
-                .agg(
-                    F.sum(F.col("nside")).alias("s1"),
-                    F.sum(1 - F.col("nside")).alias("s0"),
-                )
+                .otherwise(F.col("side"))
+                .cast("int")
+                .alias("side"),
             )
-            gains = (
-                state.join(nbr, "vid", "left")
-                .select(
-                    "vid",
-                    "side",
-                    F.when(
-                        F.col("side") == 1,
-                        F.coalesce("s0", F.lit(0))
-                        - F.coalesce("s1", F.lit(0)),
-                    )
-                    .otherwise(
-                        F.coalesce("s1", F.lit(0))
-                        - F.coalesce("s0", F.lit(0))
-                    )
-                    .cast("long")
-                    .alias("gain"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            # phase B: positive-gain vertices that beat every
-            # positive-gain neighbor flip (independent set)
-            cand_nbr_best = (
-                sym.join(
-                    gains.filter(F.col("gain") > 0).select(
-                        F.col("vid").alias("dst"),
-                        p_self.alias("np"),
-                    ),
-                    "dst",
-                )
-                .groupBy(F.col("src").alias("vid"))
-                .agg(F.max("np").alias("best_nbr_p"))
-            )
-            state = (
-                gains.join(cand_nbr_best, "vid", "left")
-                .select(
-                    "vid",
-                    F.when(
-                        (F.col("gain") > 0)
-                        & (
-                            F.col("best_nbr_p").isNull()
-                            | (p_self > F.col("best_nbr_p"))
-                        ),
-                        1 - F.col("side"),
-                    )
-                    .otherwise(F.col("side"))
-                    .cast("int")
-                    .alias("side"),
-                )
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
-            )
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
+        return state, {}, False
+
+    state, _, _ = run_rounds(
+        step, state, kernel="refine_bisection", num_partitions=num_partitions,
+        max_iter=rounds,
+    )
     sym.unpersist()
     return state

@@ -27,17 +27,12 @@ Scale posture (both kernels):
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from citation_graph_spark.checkpointing import run_rounds
 from citation_graph_spark.graph.degrees import pin_edges, undirect
-from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import iterative_kernel
 
 
 @iterative_kernel
@@ -57,9 +52,6 @@ def bfs_distances(
     joins only the NEW frontier against the cached edges and anti-joins
     already-settled vertices away.
     """
-    spark = edges.sparkSession
-    metrics = MetricsLogger(metrics_path, "bfs")
-
     e0 = edges.select("src", "dst") if directed else undirect(edges).select(
         "src", "dst"
     )
@@ -72,32 +64,31 @@ def bfs_distances(
         .repartition(num_partitions, "vid")
         .localCheckpoint(eager=True)
     )
-    frontier = dist.select("vid")
 
-    # in-loop shuffles run at the kernel's data-proportional width
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(1, max_iter + 1):
-            t0 = time.monotonic()
-            reached = (
-                e.join(frontier, e["src"] == frontier["vid"])
-                .select(F.col("dst").alias("vid"))
-                .distinct()
-            )
-            new = (
-                reached.join(dist.select("vid"), "vid", "left_anti")
-                .withColumn("dist", F.lit(it))
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
-            )
-            n_new = new.count()
-            metrics.log(
-                it, frontier=n_new, wall_s=round(time.monotonic() - t0, 4)
-            )
-            if n_new == 0:
-                break
-            dist = dist.unionByName(new).localCheckpoint(eager=True)
-            frontier = new.select("vid")
+    def step(it: int, st: tuple[DataFrame, DataFrame]):
+        dist, frontier = st
+        reached = (
+            e.join(frontier, e["src"] == frontier["vid"])
+            .select(F.col("dst").alias("vid"))
+            .distinct()
+        )
+        new = (
+            reached.join(dist.select("vid"), "vid", "left_anti")
+            .withColumn("dist", F.lit(it))
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
+        n_new = new.count()
+        if n_new == 0:
+            return st, {"frontier": 0}, True
+        dist = dist.unionByName(new).localCheckpoint(eager=True)
+        return (dist, new.select("vid")), {"frontier": n_new}, False
 
+    (dist, _), _, _ = run_rounds(
+        step, (dist, dist.select("vid")), kernel="bfs",
+        num_partitions=num_partitions, max_iter=max_iter,
+        metrics_path=metrics_path,
+    )
     e.unpersist()
     return dist
 
@@ -121,7 +112,6 @@ def bfs_per_source(
     on web-scale graphs: exact per-source distances for a K-seed
     sample instead of O(n) BFS runs (cf. the harmonic-centrality query
     built on it)."""
-    spark = edges.sparkSession
     e0 = edges.select("src", "dst") if directed else undirect(edges).select(
         "src", "dst"
     )
@@ -138,27 +128,30 @@ def bfs_per_source(
         .repartition(num_partitions, "vid")
         .localCheckpoint(eager=True)
     )
-    frontier = dist.select("seed", "vid")
 
-    # in-loop shuffles run at the kernel's data-proportional width
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(1, max_iter + 1):
-            reached = (
-                e.join(frontier, e["src"] == frontier["vid"])
-                .select("seed", F.col("dst").alias("vid"))
-                .distinct()
-            )
-            new = (
-                reached.join(dist.select("seed", "vid"), ["seed", "vid"], "left_anti")
-                .withColumn("dist", F.lit(it))
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
-            )
-            if new.count() == 0:
-                break
-            dist = dist.unionByName(new).localCheckpoint(eager=True)
-            frontier = new.select("seed", "vid")
+    def step(it: int, st: tuple[DataFrame, DataFrame]):
+        dist, frontier = st
+        reached = (
+            e.join(frontier, e["src"] == frontier["vid"])
+            .select("seed", F.col("dst").alias("vid"))
+            .distinct()
+        )
+        new = (
+            reached.join(dist.select("seed", "vid"), ["seed", "vid"], "left_anti")
+            .withColumn("dist", F.lit(it))
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
+        n_new = new.count()
+        if n_new == 0:
+            return st, {"frontier": 0}, True
+        dist = dist.unionByName(new).localCheckpoint(eager=True)
+        return (dist, new.select("seed", "vid")), {"frontier": n_new}, False
 
+    (dist, _), _, _ = run_rounds(
+        step, (dist, dist.select("seed", "vid")), kernel="bfs_per_source",
+        num_partitions=num_partitions, max_iter=max_iter,
+    )
     e.unpersist()
     return dist
 
@@ -185,9 +178,6 @@ def sssp(
     new in round r) while doing frontier-proportional work — the same
     property that makes BFS above scale.
     """
-    spark = edges.sparkSession
-    metrics = MetricsLogger(metrics_path, "sssp")
-
     e0 = edges.select("src", "dst", F.col("weight").cast("long").alias("w"))
     if not directed:
         e0 = e0.unionByName(
@@ -206,53 +196,51 @@ def sssp(
         .repartition(num_partitions, "vid")
         .localCheckpoint(eager=True)
     )
-    frontier = dist
 
-    # in-loop shuffles run at the kernel's data-proportional width
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(1, max_iter + 1):
-            t0 = time.monotonic()
-            cand = (
-                e.join(frontier, e["src"] == frontier["vid"])
-                .select(
-                    F.col("dst").alias("vid"),
-                    (F.col("dist") + F.col("w")).alias("cand"),
-                )
-                .groupBy("vid")
-                .agg(F.min("cand").alias("cand"))
+    def step(it: int, st: tuple[DataFrame, DataFrame]):
+        dist, frontier = st
+        cand = (
+            e.join(frontier, e["src"] == frontier["vid"])
+            .select(
+                F.col("dst").alias("vid"),
+                (F.col("dist") + F.col("w")).alias("cand"),
             )
-            merged = (
-                dist.join(cand, "vid", "full")
-                .select(
-                    "vid",
-                    # least() skips NULLs (returns NULL only if both are),
-                    # exactly min-ignoring-infinity
-                    F.least("dist", "cand").alias("new_dist"),
-                    F.col("dist").alias("old_dist"),
-                )
+            .groupBy("vid")
+            .agg(F.min("cand").alias("cand"))
+        )
+        merged = (
+            dist.join(cand, "vid", "full")
+            .select(
+                "vid",
+                # least() skips NULLs (returns NULL only if both are),
+                # exactly min-ignoring-infinity
+                F.least("dist", "cand").alias("new_dist"),
+                F.col("dist").alias("old_dist"),
             )
-            improved = (
-                merged.filter(
-                    F.col("old_dist").isNull()
-                    | (F.col("new_dist") < F.col("old_dist"))
-                )
-                .select("vid", F.col("new_dist").alias("dist"))
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
+        )
+        improved = (
+            merged.filter(
+                F.col("old_dist").isNull()
+                | (F.col("new_dist") < F.col("old_dist"))
             )
-            n_improved = improved.count()
-            metrics.log(
-                it, improved=n_improved, wall_s=round(time.monotonic() - t0, 4)
-            )
-            if n_improved == 0:
-                break
-            dist = (
-                merged.select("vid", F.col("new_dist").alias("dist"))
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
-            )
-            frontier = improved
+            .select("vid", F.col("new_dist").alias("dist"))
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
+        n_improved = improved.count()
+        if n_improved == 0:
+            return st, {"improved": 0}, True
+        dist = (
+            merged.select("vid", F.col("new_dist").alias("dist"))
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
+        return (dist, improved), {"improved": n_improved}, False
 
+    (dist, _), _, _ = run_rounds(
+        step, (dist, dist), kernel="sssp", num_partitions=num_partitions,
+        max_iter=max_iter, metrics_path=metrics_path,
+    )
     e.unpersist()
     return dist
 
@@ -273,7 +261,6 @@ def personalized_pagerank(
     edge endpoint or a seed; Σ score = 1.
     """
     spark = edges.sparkSession
-    metrics = MetricsLogger(metrics_path, "personalized_pagerank")
 
     seed_set = seeds.select("vid").distinct()
     n_seeds = seed_set.count()
@@ -322,44 +309,46 @@ def personalized_pagerank(
     )
     has_dangling = ranks.filter(F.col("is_dangling")).limit(1).count() > 0
 
-    # in-loop shuffles run at the kernel's data-proportional width
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(1, max_iter + 1):
-            t0 = time.monotonic()
-            d_mass = 0.0
-            if has_dangling:
-                # one small agg over the checkpointed state — no recompute
-                d_mass = (
-                    ranks.agg(
-                        F.coalesce(
-                            F.sum(F.when(F.col("is_dangling"), F.col("rank"))),
-                            F.lit(0.0),
-                        )
-                    ).collect()[0][0]
-                )
-            contribs = e.join(
-                ranks.select("vid", "rank"), e["src"] == F.col("vid")
-            ).select(F.col("dst"), (F.col("rank") * F.col("wnorm")).alias("c"))
-            sums = contribs.groupBy("dst").agg(F.sum("c").alias("m"))
-            ranks = (
-                ranks.join(sums, ranks["vid"] == sums["dst"], "left")
-                .select(
-                    ranks["vid"],
-                    ranks["s"],
-                    ranks["is_dangling"],
-                    (
-                        F.lit(1.0 - alpha) * F.col("s")
-                        + F.lit(alpha)
-                        * (
-                            F.coalesce(F.col("m"), F.lit(0.0))
-                            + F.lit(d_mass) * F.col("s")
-                        )
-                    ).alias("rank"),
-                )
-                .localCheckpoint(eager=True)
+    def step(it: int, ranks: DataFrame):
+        d_mass = 0.0
+        if has_dangling:
+            # one small agg over the checkpointed state — no recompute
+            d_mass = (
+                ranks.agg(
+                    F.coalesce(
+                        F.sum(F.when(F.col("is_dangling"), F.col("rank"))),
+                        F.lit(0.0),
+                    )
+                ).collect()[0][0]
             )
-            metrics.log(it, wall_s=round(time.monotonic() - t0, 4), edges=n_edges)
+        contribs = e.join(
+            ranks.select("vid", "rank"), e["src"] == F.col("vid")
+        ).select(F.col("dst"), (F.col("rank") * F.col("wnorm")).alias("c"))
+        sums = contribs.groupBy("dst").agg(F.sum("c").alias("m"))
+        ranks = (
+            ranks.join(sums, ranks["vid"] == sums["dst"], "left")
+            .select(
+                ranks["vid"],
+                ranks["s"],
+                ranks["is_dangling"],
+                (
+                    F.lit(1.0 - alpha) * F.col("s")
+                    + F.lit(alpha)
+                    * (
+                        F.coalesce(F.col("m"), F.lit(0.0))
+                        + F.lit(d_mass) * F.col("s")
+                    )
+                ).alias("rank"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        return ranks, {"edges": n_edges}, False
 
+    ranks, _, _ = run_rounds(
+        step, ranks, kernel="personalized_pagerank",
+        num_partitions=num_partitions, max_iter=max_iter,
+        metrics_path=metrics_path,
+    )
     e.unpersist()
     return ranks.select("vid", F.col("rank").alias("score"))
 
@@ -390,9 +379,6 @@ def widest_paths(
     the frontier argument carries over verbatim): each round relaxes
     only the out-edges of vertices whose width improved last round.
     """
-    spark = edges.sparkSession
-    metrics = MetricsLogger(metrics_path, "widest")
-
     e0 = edges.select("src", "dst", F.col("weight").cast("long").alias("w"))
     if not directed:
         e0 = e0.unionByName(
@@ -411,48 +397,47 @@ def widest_paths(
         .repartition(num_partitions, "vid")
         .localCheckpoint(eager=True)
     )
-    frontier = cap
 
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(1, max_iter + 1):
-            t0 = time.monotonic()
-            cand = (
-                e.join(frontier, e["src"] == frontier["vid"])
-                .select(
-                    F.col("dst").alias("vid"),
-                    F.least("width", "w").alias("cand"),
-                )
-                .groupBy("vid")
-                .agg(F.max("cand").alias("cand"))
+    def step(it: int, st: tuple[DataFrame, DataFrame]):
+        cap, frontier = st
+        cand = (
+            e.join(frontier, e["src"] == frontier["vid"])
+            .select(
+                F.col("dst").alias("vid"),
+                F.least("width", "w").alias("cand"),
             )
-            merged = cap.join(cand, "vid", "full").select(
-                "vid",
-                # greatest() skips NULLs: max-ignoring-unreached
-                F.greatest("width", "cand").alias("new_w"),
-                F.col("width").alias("old_w"),
+            .groupBy("vid")
+            .agg(F.max("cand").alias("cand"))
+        )
+        merged = cap.join(cand, "vid", "full").select(
+            "vid",
+            # greatest() skips NULLs: max-ignoring-unreached
+            F.greatest("width", "cand").alias("new_w"),
+            F.col("width").alias("old_w"),
+        )
+        improved = (
+            merged.filter(
+                F.col("old_w").isNull()
+                | (F.col("new_w") > F.col("old_w"))
             )
-            improved = (
-                merged.filter(
-                    F.col("old_w").isNull()
-                    | (F.col("new_w") > F.col("old_w"))
-                )
-                .select("vid", F.col("new_w").alias("width"))
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
-            )
-            n_improved = improved.count()
-            metrics.log(
-                it, improved=n_improved, wall_s=round(time.monotonic() - t0, 4)
-            )
-            if n_improved == 0:
-                break
-            cap = (
-                merged.select("vid", F.col("new_w").alias("width"))
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
-            )
-            frontier = improved
+            .select("vid", F.col("new_w").alias("width"))
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
+        n_improved = improved.count()
+        if n_improved == 0:
+            return st, {"improved": 0}, True
+        cap = (
+            merged.select("vid", F.col("new_w").alias("width"))
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
+        return (cap, improved), {"improved": n_improved}, False
 
+    (cap, _), _, _ = run_rounds(
+        step, (cap, cap), kernel="widest", num_partitions=num_partitions,
+        max_iter=max_iter, metrics_path=metrics_path,
+    )
     e.unpersist()
     return cap.select(
         "vid",

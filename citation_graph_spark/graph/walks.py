@@ -25,11 +25,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from citation_graph_spark.checkpointing import run_rounds
 from citation_graph_spark.graph.degrees import pin_edges
-from citation_graph_spark.session import (
-    iterative_kernel,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import iterative_kernel
 
 # shared with the SQL oracle and the python replay (tests): int64-safe
 # for dense vids up to ~2^40
@@ -76,7 +74,6 @@ def deterministic_walks(
     """One walk per seed vertex: ``(wid, step, vid)`` rows for
     step = 0..steps (fewer if the walk hits a sink). ``wid`` is the
     seed's vid; ``seeds`` is a DataFrame with a ``vid`` column."""
-    spark = edges.sparkSession
     e, _, num_partitions = pin_edges(edges.select("src", "dst").distinct())
 
     frontier = (
@@ -89,16 +86,20 @@ def deterministic_walks(
         )
         .localCheckpoint(eager=True)
     )
-    out = frontier
 
-    with shuffle_partitions_conf(spark, num_partitions):
-        for t in range(1, steps + 1):
-            frontier = walk_round_lineage(e, frontier, t).localCheckpoint(
-                eager=True
-            )
-            if frontier.isEmpty():
-                break
-            out = out.unionByName(frontier)
+    def step(t: int, st: tuple[DataFrame, DataFrame]):
+        out, frontier = st
+        frontier = walk_round_lineage(e, frontier, t).localCheckpoint(
+            eager=True
+        )
+        if frontier.isEmpty():
+            return st, {}, True
+        return (out.unionByName(frontier), frontier), {}, False
+
+    (out, _), _, _ = run_rounds(
+        step, (frontier, frontier), kernel="deterministic_walks",
+        num_partitions=num_partitions, max_iter=steps,
+    )
     e.unpersist()
     return out.select("wid", "step", F.col("v").alias("vid"))
 
@@ -130,37 +131,38 @@ def neighbor_sample(
     most Π fanouts rows per seed."""
     if not fanouts:
         raise ValueError("fanouts must name at least one hop")
-    spark = edges.sparkSession
     e, _, num_partitions = pin_edges(edges.select("src", "dst").distinct())
 
     frontier = seeds.select(
         F.col("vid").alias("seed"), F.col("vid").alias("v")
     ).distinct()
-    out = None
     w = Window.partitionBy("src").orderBy("h_pri", "dst")
-    with shuffle_partitions_conf(spark, num_partitions):
-        for hop, fanout in enumerate(fanouts, start=1):
-            samp = (
-                e.withColumn(
-                    "h_pri",
-                    walk_priority(F.col("src"), F.lit(hop), F.col("dst")),
-                )
-                .withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") <= fanout)
-                .select("src", "dst")
+
+    def step(hop: int, st: tuple[DataFrame | None, DataFrame]):
+        out, frontier = st
+        samp = (
+            e.withColumn(
+                "h_pri",
+                walk_priority(F.col("src"), F.lit(hop), F.col("dst")),
             )
-            rows = (
-                frontier.join(samp, frontier["v"] == samp["src"])
-                .select(
-                    "seed", F.lit(hop).alias("hop"), "src", "dst"
-                )
-                .localCheckpoint(eager=True)
-            )
-            out = rows if out is None else out.unionByName(rows)
-            frontier = rows.select(
-                "seed", F.col("dst").alias("v")
-            ).distinct()
-            if frontier.isEmpty():  # every branch hit a sink:
-                break  # later hops would rank O(E) rows for nothing
+            .withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") <= fanouts[hop - 1])
+            .select("src", "dst")
+        )
+        rows = (
+            frontier.join(samp, frontier["v"] == samp["src"])
+            .select("seed", F.lit(hop).alias("hop"), "src", "dst")
+            .localCheckpoint(eager=True)
+        )
+        out = rows if out is None else out.unionByName(rows)
+        frontier = rows.select("seed", F.col("dst").alias("v")).distinct()
+        # every branch hit a sink: later hops would rank O(E) rows for
+        # nothing
+        return (out, frontier), {}, frontier.isEmpty()
+
+    (out, _), _, _ = run_rounds(
+        step, (None, frontier), kernel="neighbor_sample",
+        num_partitions=num_partitions, max_iter=len(fanouts),
+    )
     e.unpersist()
     return out

@@ -34,11 +34,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from citation_graph_spark.checkpointing import run_rounds
 from citation_graph_spark.graph.degrees import auto_partitions, undirect
-from citation_graph_spark.session import (
-    iterative_kernel,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import iterative_kernel
 
 WL_P = 2147483647
 WL_C1 = 1000003
@@ -90,12 +88,18 @@ def wl_refinement(
         .repartition(num_partitions, "vid")
         .localCheckpoint(eager=True)
     )
-    with shuffle_partitions_conf(spark, num_partitions):
-        for _ in range(rounds):
-            colors = (
-                wl_round_lineage(sym, colors)
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
-            )
+
+    def step(it: int, colors: DataFrame):
+        colors = (
+            wl_round_lineage(sym, colors)
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
+        return colors, {}, False
+
+    colors, _, _ = run_rounds(
+        step, colors, kernel="wl_refinement", num_partitions=num_partitions,
+        max_iter=rounds,
+    )
     sym.unpersist()
     return colors

@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import json
 import os
-import time
 
 
 class MetricsLogger:
@@ -30,6 +29,3 @@ class MetricsLogger:
             with open(self.path, "a") as f:
                 f.write(json.dumps(rec) + "\n")
         return rec
-
-    def timer(self) -> float:
-        return time.monotonic()

@@ -285,7 +285,14 @@ def _hdbscan_oracle(
     no MSF — so agreement proves forest cuts ≡ graph cuts.  ``ivf``
     swaps the exact all-pairs ε-graph for the shared IVF blocking spec
     (dedup.ivf_cand_ctes), mirroring the engine's ``candidates="ivf"``
-    path so the blocked pipeline is checked end-to-end too."""
+    path so the blocked pipeline is checked end-to-end too.
+
+    The ε-graph CTEs are MATERIALIZED: each recursive ``reach{i}`` step
+    reads ``mr``, and inlined CTEs would re-derive the all-pairs (or
+    IVF-blocked) distance join on every iteration. On the d=512 test
+    fixture (DuckDB 1.0.0 capped at 3 GB and 2 threads) inlining took
+    43 s instead of 1.6 s for the exact oracle and ran the IVF one out
+    of memory."""
     k = min_samples - 1
     reach_ctes = ",\n".join(
         f"""
@@ -325,13 +332,16 @@ def _hdbscan_oracle(
       FROM embeddings
     ),
     {ivf_cand_ctes(_IVF_NPROBE_EPS)},
-    n AS (SELECT vec_id, qv, list_dot_product(qv, qv) AS nrm FROM q),
-    sym AS (
-      SELECT v1, v2 FROM cand
-      UNION ALL
-      SELECT v2 AS v1, v1 AS v2 FROM cand
+    cand_m AS MATERIALIZED (SELECT v1, v2 FROM cand),
+    n AS MATERIALIZED (
+      SELECT vec_id, qv, list_dot_product(qv, qv) AS nrm FROM q
     ),
-    pairs AS (
+    sym AS (
+      SELECT v1, v2 FROM cand_m
+      UNION ALL
+      SELECT v2 AS v1, v1 AS v2 FROM cand_m
+    ),
+    pairs AS MATERIALIZED (
       SELECT s.v1, s.v2,
              a.nrm + b.nrm - 2 * list_dot_product(a.qv, b.qv) AS dist2
       FROM sym s JOIN n a ON s.v1 = a.vec_id JOIN n b ON s.v2 = b.vec_id
@@ -344,8 +354,10 @@ def _hdbscan_oracle(
                x -> cast(floor(cast(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS qv
       FROM embeddings
     ),
-    n AS (SELECT vec_id, qv, list_dot_product(qv, qv) AS nrm FROM q),
-    pairs AS (
+    n AS MATERIALIZED (
+      SELECT vec_id, qv, list_dot_product(qv, qv) AS nrm FROM q
+    ),
+    pairs AS MATERIALIZED (
       SELECT a.vec_id AS v1, b.vec_id AS v2,
              a.nrm + b.nrm - 2 * list_dot_product(a.qv, b.qv) AS dist2
       FROM n a JOIN n b ON a.vec_id <> b.vec_id
@@ -353,14 +365,14 @@ def _hdbscan_oracle(
     )"""
     return f"""
     WITH RECURSIVE {graph_ctes},
-    core AS (
+    core AS MATERIALIZED (
       SELECT v1 AS vec_id, dist2 AS core2 FROM (
         SELECT v1, dist2,
                row_number() OVER (PARTITION BY v1 ORDER BY dist2, v2) AS rn
         FROM pairs
       ) WHERE rn = {k}
     ),
-    mr AS (
+    mr AS MATERIALIZED (
       SELECT p.v1 AS src, p.v2 AS dst,
              greatest(p.dist2, a.core2, b.core2) AS w
       FROM pairs p

@@ -276,3 +276,66 @@ def test_matching_kill_resume_identical(spark, tmp_path):
         .collect()
     )
     assert [tuple(r) for r in full] == [tuple(r) for r in resumed]
+
+
+def _scores(df):
+    return df.orderBy("vid").toPandas()["score"].to_numpy()
+
+
+def test_pagerank_resume_with_tighter_tol_keeps_iterating(spark, tmp_path):
+    # a snapshot converged at tol 1e-2 is not converged at 1e-10: the
+    # resumed call continues from it to the tighter fixpoint instead of
+    # returning the loose vector
+    el = random_graph(300, 1500, seed=3)
+    edges = edges_df(spark, el)
+    verts = vertices_df(spark, 300)
+    ck = str(tmp_path / "ck")
+
+    pagerank(edges, verts, tol=1e-2, checkpoint_dir=ck)
+    resumed = _scores(
+        pagerank(edges, verts, tol=1e-10, checkpoint_dir=ck, resume=True)
+    )
+    fresh = _scores(pagerank(edges, verts, tol=1e-10))
+    assert np.abs(resumed - fresh).max() < 1e-9
+
+
+def test_pagerank_resume_with_other_alpha_keeps_iterating(spark, tmp_path):
+    # a converged alpha-0.5 snapshot is only a start vector for an
+    # alpha-0.85 call, which must reach the alpha-0.85 fixpoint
+    el = random_graph(300, 1500, seed=3)
+    edges = edges_df(spark, el)
+    verts = vertices_df(spark, 300)
+    ck = str(tmp_path / "ck")
+
+    pagerank(edges, verts, alpha=0.5, tol=1e-10, checkpoint_dir=ck)
+    resumed = _scores(
+        pagerank(
+            edges, verts, alpha=0.85, tol=1e-10, checkpoint_dir=ck, resume=True
+        )
+    )
+    fresh = _scores(pagerank(edges, verts, alpha=0.85, tol=1e-10))
+    assert np.abs(resumed - fresh).max() < 1e-9
+
+
+def test_katz_resume_with_other_beta_starts_cold(spark, tmp_path, caplog):
+    from citation_graph_spark.graph.katz import katz_centrality
+
+    el = random_graph(300, 1500, seed=7)
+    edges = edges_df(spark, el)
+    verts = vertices_df(spark, 300)
+    ck = str(tmp_path / "ck")
+
+    katz_centrality(
+        edges, verts, beta=1.0, max_iter=3, checkpoint_dir=ck,
+        checkpoint_interval=2,
+    )
+    resumed = _scores(
+        katz_centrality(
+            edges, verts, beta=2.0, max_iter=6, checkpoint_dir=ck, resume=True
+        )
+    )
+    fresh = _scores(katz_centrality(edges, verts, beta=2.0, max_iter=6))
+    # the beta-1 state is a different series: the call starts cold and
+    # says why, so the result is bit-identical to a fresh run
+    assert (resumed == fresh).all()
+    assert any("beta" in r.getMessage() for r in caplog.records)
